@@ -95,23 +95,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Optional regime override (same bridge as ScaleProbe/Verify):
-    // forces the shuffle branch of every dual-regime kernel. A run with
-    // this set is a CLUSTER-REGIME measurement — announce it loudly so
-    // it is never confused with the frozen-table default regime.
-    val bThresh = sys.env.get("SPARK_GRAFT_BROADCAST_THRESHOLD")
-    bThresh.foreach { v =>
-      sys.props("graft.broadcast.threshold") = v
+    val cpus = ToolSession.cpus
+    // The regime override (ToolSession's env bridge) forces the shuffle
+    // branch of every dual-regime kernel. A run with it set is a
+    // CLUSTER-REGIME measurement — announce it loudly so it is never
+    // confused with the frozen-table default regime.
+    ToolSession.thresholdOverride.foreach { v =>
       System.err.println(s"BENCH REGIME OVERRIDE: broadcast threshold = $v — " +
         "cluster-regime run, NOT comparable to the frozen default-regime table")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession.start()
     // Untimed warm-up: JIT/codegen + the shared graph build/persist are
     // session infrastructure, not per-query cost.
     spark.range(1000000).selectExpr("sum(id)").collect()

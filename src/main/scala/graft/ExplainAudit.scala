@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit diagnostic: prints the shuffle/join/window skeleton of
   * named queries (all queries when no names are given) so a reviewer
   * can see at a glance whether an operator shuffles more than its
@@ -16,11 +14,7 @@ object ExplainAudit {
     val sfDir = args.head
     val names = if (args.length > 1) args.tail.toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession.start("ERROR")
     try names.foreach { q =>
       println(s"===== $q =====")
       val plan = SparkEntry.queries(q)(spark, sfDir)

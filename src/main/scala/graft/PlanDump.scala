@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Round-15 deliverable helper: dump `.explain("formatted")` for named
@@ -9,21 +8,15 @@ import org.apache.spark.sql.execution.FormattedMode
   * {{{
   *   sbt "runMain graft.PlanDump /root/testdata/sf0.1 plans/r15 before q_hubness q_banding_curve"
   * }}}
-  * Uses the bench's own session shape (local[N] from SPARK_GRAFT_CPUS,
-  * shuffle partitions = N) so the dumped plan is the one the bench
-  * actually runs. */
+  * Uses the bench's own session ([[ToolSession]]) so the dumped plan is
+  * the one the bench actually runs. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <sfDir> <outDir> <suffix> [queryName...]")
     val sfDir = args(0); val outDir = args(1); val suffix = args(2)
     val names = if (args.length > 3) args.drop(3).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession.start("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     try names.foreach { q =>
       val fn = SparkEntry.queries.getOrElse(q,

@@ -19,12 +19,7 @@ object ProfileRun {
     require(args.length >= 3, "usage: ProfileRun <sfDir> <reps> <name>...")
     val sfDir = args(0); val reps = args(1).toInt
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession.start()
     spark.range(1000000).selectExpr("sum(id)").collect()
     try graft.graph.GraphBuilder.tpch(spark, sfDir).edges.count()
     catch { case _: Throwable => () }

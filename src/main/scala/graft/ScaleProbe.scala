@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipeline.{Corpus, Dedup, TextOps}
 import graft.algorithms.Community
@@ -17,20 +17,12 @@ import graft.algorithms.Community
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val k = sys.env.getOrElse("SPARK_GRAFT_SCALE_K", "4").toInt
     val dir = sys.env("SPARK_GRAFT_SF_DIR")
-    // Optional regime override: SPARK_GRAFT_BROADCAST_THRESHOLD=0 forces
-    // every dual-regime kernel onto its shuffle (cluster-scale) branch,
-    // so the probe can time the code path a 100× run actually executes.
-    val bThresh = sys.env.get("SPARK_GRAFT_BROADCAST_THRESHOLD")
-    bThresh.foreach(v => sys.props("graft.broadcast.threshold") = v)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_BROADCAST_THRESHOLD=0 (ToolSession's env bridge)
+    // forces every dual-regime kernel onto its shuffle (cluster-scale)
+    // branch, so the probe can time the code path a 100× run executes.
+    val spark = ToolSession.start()
 
     // Optional comma-separated kernel filter: probe only these names
     // (re-certifying a new wave without paying the full heavy sweep)
@@ -550,7 +542,7 @@ object ScaleProbe {
     val ratios = t1.keys.map(q => q -> BigDecimal(tk(q) / t1(q))
       .setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble).toMap
     println(
-      s"""{"probe":"scale","k":$k,"base_docs":$n,"broadcast_threshold":"${bThresh.getOrElse("default")}",""" +
+      s"""{"probe":"scale","k":$k,"base_docs":$n,"broadcast_threshold":"${ToolSession.thresholdOverride.getOrElse("default")}",""" +
         s""""t1":{${t1.map { case (q, t) => s""""$q":${BigDecimal(t).setScale(2, BigDecimal.RoundingMode.HALF_UP)}""" }.mkString(",")}},""" +
         s""""tk":{${tk.map { case (q, t) => s""""$q":${BigDecimal(t).setScale(2, BigDecimal.RoundingMode.HALF_UP)}""" }.mkString(",")}},""" +
         s""""ratio":{${ratios.map { case (q, r) => s""""$q":$r""" }.mkString(",")}}}""")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,20 +8,11 @@ object Verify {
     // iteration path; the driver always passes exactly (sfDir, outDir)
     val sfDir = args(0); val outDir = args(1)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Optional regime override (same bridge as ScaleProbe/Bench):
-    // SPARK_GRAFT_BROADCAST_THRESHOLD=0 forces every dual-regime kernel
-    // onto its shuffle (cluster-scale) branch, so the ENTIRE oracle
-    // suite can be checked against the code path a 100 TB run executes.
-    sys.env.get("SPARK_GRAFT_BROADCAST_THRESHOLD")
-      .foreach(v => sys.props("graft.broadcast.threshold") = v)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_BROADCAST_THRESHOLD=0 (ToolSession's env bridge)
+    // forces every dual-regime kernel onto its shuffle (cluster-scale)
+    // branch, so the ENTIRE oracle suite can be checked against the
+    // code path a 100 TB run executes.
+    val spark = ToolSession.start()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.isEmpty || only(name))

@@ -43,22 +43,18 @@ object Anf {
     val rho = when(wrest === 0L, lit(maxRho))
       .otherwise(lit(maxRho) - length(bin(wrest)).cast("int"))
     // ball(v, 0) = {v}: one register hit per node
-    val (regs0, mN) = Probe.checkpointObserved(
+    val (regs0, nN) = Probe.checkpointCounted(
       nodes.select(col("id") +: (0 until m).map(i =>
-        when(lit(i) === bucket, rho).otherwise(lit(0)).as(s"r$i")): _*),
-      count(lit(1)).as("n"))
+        when(lit(i) === bucket, rho).otherwise(lit(0)).as(s"r$i")): _*))
     var regs = regs0
     // While the |V|-row register frame fits the gate it broadcasts into
     // the per-round edge join (the edge frame streams in place); past
-    // it the join shuffles, same dual-regime discipline as every
-    // iterative kernel. Register VALUES are identical either way.
-    val small = mN("n").asInstanceOf[Long] <= Tuning.broadcastThreshold
-    val (edges, _) = Probe.checkpointObserved(
-      symEdges.select("src", "dst"), count(lit(1)).as("n"))
+    // it the join shuffles. Register VALUES are identical either way.
+    val (edges, _) = Probe.checkpointCounted(symEdges.select("src", "dst"))
     var out = estimate(regs, 0, p, regCols)
     for (r <- 1 to rounds) {
       // B(v, r) = B(v, r−1) ∪ ⋃_{(u,v)∈E} B(u, r−1)
-      val msg = edges.join(if (small) broadcast(regs) else regs,
+      val msg = edges.join(Tuning.broadcastIfFits(regs, nN),
           col("src") === col("id"))
         .select(col("dst").as("id") +: regCols.map(col): _*)
       regs = regs.unionByName(msg)

@@ -13,9 +13,8 @@ object Centrality {
     // The node count rides the id-set checkpoint (Dataset.observe), and
     // the two degree joins probe the checkpoint instead of re-running
     // the node scan — one job, consistent with every other kernel.
-    val (ids, mN) = Probe.checkpointObserved(
-      nodes.select("id"), count(lit(1)).as("n"))
-    val n = mN("n").asInstanceOf[Long].toDouble
+    val (ids, nN) = Probe.checkpointCounted(nodes.select("id"))
+    val n = nN.toDouble
     val out = edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("od"))
     val in = edges.groupBy(col("dst").as("id")).agg(count(lit(1)).as("idg"))
     ids
@@ -58,54 +57,47 @@ object Centrality {
     // upstream scan+filter each level. The node count rides the id-set
     // checkpoint (Dataset.observe), which the source pick and final
     // left-outer reuse.
-    val (e, mEc) = Probe.checkpointObserved(
-      edges.select("src", "dst"), count(lit(1)).as("m"))
-    val (idsCk, mN) = Probe.checkpointObserved(
-      nodes.select("id"), count(lit(1)).as("n"))
-    val n = mN("n").asInstanceOf[Long].toDouble
+    val (e, nEc) = Probe.checkpointCounted(edges.select("src", "dst"))
+    val (idsCk, nN) = Probe.checkpointCounted(nodes.select("id"))
+    val n = nN.toDouble
     val (sources, scale) = sampleK match {
       case None => (idsCk, 1.0)
       case Some(k) =>
-        val (srcs, mS) = Probe.checkpointObserved(
+        val (srcs, nS) = Probe.checkpointCounted(
           idsCk
             .orderBy(graft.pipeline.TextOps.hash60(col("id").cast("string"), "bc:").asc,
               col("id").asc)
-            .limit(k),
-          count(lit(1)).as("n"))
-        (srcs, n / mS("n").asInstanceOf[Long].toDouble)
+            .limit(k))
+        (srcs, n / nS.toDouble)
     }
-    // Dual regime, same gate pattern as the other iterative kernels:
-    // the (s,v)-keyed level frames cost two scheduler-floor joins per
-    // BFS level each way, so while nodes AND edges fit the driver gate,
-    // run per-source Brandes over a packed edge collect — the same
-    // shortest-path DAG sums (σ is an exact integer in a double; δ
+    // Dual regime: the (s,v)-keyed level frames cost two scheduler-floor
+    // joins per BFS level each way, so while nodes AND edges fit the
+    // driver gate, run per-source Brandes over a packed edge collect — the
+    // same shortest-path DAG sums (σ is an exact integer in a double; δ
     // folds differ only in float add ORDER, which the oracle rounding
-    // absorbs like every float aggregate). Past the gate the level
-    // joins below are the 100 TB path.
-    if (mN("n").asInstanceOf[Long] <= Tuning.broadcastThreshold &&
-        mEc("m").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    // absorbs like every float aggregate). Past the gate the level joins
+    // below are the 100 TB path.
+    if (Tuning.fits(nN, nEc))
       return brandesLocal(idsCk, e, sources, scale, maxDepth, n)
     // Emptiness probes ride the level checkpoints (Dataset.observe) —
     // one job per BFS level, no separate isEmpty scans.
-    val (f0, m0) = Probe.checkpointObserved(
+    val (f0, n0) = Probe.checkpointCounted(
       sources.select(col("id").as("s"), col("id").as("v"))
-        .withColumn("sigma", lit(1.0)),
-      count(lit(1)).as("n"))
+        .withColumn("sigma", lit(1.0)))
     var frontier = f0
-    var frontierCount = m0("n").asInstanceOf[Long]
+    var frontierCount = n0
     var visited = frontier.select("s", "v")
     val levels = ArrayBuffer(frontier)
     var d = 0
     while (d < maxDepth && frontierCount > 0) {
       d += 1
-      val (f, mF) = Probe.checkpointObserved(
+      val (f, nF) = Probe.checkpointCounted(
         frontier.join(e, frontier("v") === e("src"))
           .select(col("s"), e("dst").as("v"), col("sigma"))
           .groupBy("s", "v").agg(sum("sigma").as("sigma"))
-          .join(visited, Seq("s", "v"), "left_anti"),
-        count(lit(1)).as("n"))
+          .join(visited, Seq("s", "v"), "left_anti"))
       frontier = f
-      frontierCount = mF("n").asInstanceOf[Long]
+      frontierCount = nF
       if (frontierCount > 0) {
         visited = visited.unionByName(frontier.select("s", "v")).localCheckpoint()
         levels += frontier
@@ -239,21 +231,13 @@ object Centrality {
     * per-source values are still exact for those sources. */
   def closeness(nodes: DataFrame, edges: DataFrame, maxDepth: Int,
                 sources: Option[DataFrame] = None): DataFrame = {
-    val (e, mE) = Probe.checkpointObserved(
-      edges.select("src", "dst").distinct(), count(lit(1)).as("m"))
-    val (idsCk, mN) = Probe.checkpointObserved(
-      nodes.select("id"), count(lit(1)).as("n"))
-    val (srcs, _) = sources match {
-      case None => (idsCk, ())
-      case Some(s) => (Probe.checkpointObserved(
-        s.select("id"), count(lit(1)).as("n"))._1, ())
-    }
-    // Dual regime, same driver gate as the other iterative kernels:
-    // under it, per-source BFS over the packed CSR replays the exact
-    // level semantics; past it the (s, v) level joins below are the
-    // cluster path.
-    if (mN("n").asInstanceOf[Long] <= Tuning.broadcastThreshold &&
-        mE("m").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    val (e, nE) = Probe.checkpointCounted(edges.select("src", "dst").distinct())
+    val (idsCk, nN) = Probe.checkpointCounted(nodes.select("id"))
+    val srcs = sources.fold(idsCk)(s => Probe.checkpointCounted(s.select("id"))._1)
+    // Dual regime: under the gate, per-source BFS over the packed CSR replays
+    // the exact level semantics; past it the (s, v) level joins below are
+    // the cluster path.
+    if (Tuning.fits(nN, nE))
       return closenessLocal(idsCk, e, srcs, maxDepth)
     val levels = bfsLevelFrames(srcs, e, maxDepth)
     val agg =
@@ -279,23 +263,20 @@ object Centrality {
     * throughout; empty when nothing is reachable. */
   private def bfsLevelFrames(srcs: DataFrame, e: DataFrame,
                              maxDepth: Int): Seq[DataFrame] = {
-    val (f0, m0) = Probe.checkpointObserved(
-      srcs.select(col("id").as("s"), col("id").as("v")),
-      count(lit(1)).as("n"))
+    val (f0, n0) = Probe.checkpointCounted(srcs.select(col("id").as("s"), col("id").as("v")))
     var frontier = f0
-    var frontierCount = m0("n").asInstanceOf[Long]
+    var frontierCount = n0
     var visited = frontier
     val levels = ArrayBuffer.empty[DataFrame]
     var d = 0
     while (d < maxDepth && frontierCount > 0) {
       d += 1
-      val (f, mF) = Probe.checkpointObserved(
+      val (f, nF) = Probe.checkpointCounted(
         frontier.join(e, frontier("v") === e("src"))
           .select(col("s"), e("dst").as("v")).distinct()
-          .join(visited, Seq("s", "v"), "left_anti"),
-        count(lit(1)).as("n"))
+          .join(visited, Seq("s", "v"), "left_anti"))
       frontier = f
-      frontierCount = mF("n").asInstanceOf[Long]
+      frontierCount = nF
       if (frontierCount > 0) {
         visited = visited.unionByName(frontier).localCheckpoint()
         levels += frontier.withColumn("dist", lit(d.toLong))
@@ -313,17 +294,10 @@ object Centrality {
     * the closeness sums). */
   def eccentricity(nodes: DataFrame, edges: DataFrame, maxDepth: Int,
                    sources: Option[DataFrame] = None): DataFrame = {
-    val (e, mE) = Probe.checkpointObserved(
-      edges.select("src", "dst").distinct(), count(lit(1)).as("m"))
-    val (idsCk, mN) = Probe.checkpointObserved(
-      nodes.select("id"), count(lit(1)).as("n"))
-    val (srcs, _) = sources match {
-      case None => (idsCk, ())
-      case Some(s) => (Probe.checkpointObserved(
-        s.select("id"), count(lit(1)).as("n"))._1, ())
-    }
-    if (mN("n").asInstanceOf[Long] <= Tuning.broadcastThreshold &&
-        mE("m").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    val (e, nE) = Probe.checkpointCounted(edges.select("src", "dst").distinct())
+    val (idsCk, nN) = Probe.checkpointCounted(nodes.select("id"))
+    val srcs = sources.fold(idsCk)(s => Probe.checkpointCounted(s.select("id"))._1)
+    if (Tuning.fits(nN, nE))
       return eccLocal(idsCk, e, srcs, maxDepth)
     val levels = bfsLevelFrames(srcs, e, maxDepth)
     val agg =
@@ -474,13 +448,10 @@ object Centrality {
     * nodes outside every edge at 0.0. */
   def hits(nodes: DataFrame, edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, "HITS needs >= 1 iteration")
-    val (e, mE) = Probe.checkpointObserved(
-      edges.select("src", "dst"), count(lit(1)).as("m"))
-    val (idsCk, mN) = Probe.checkpointObserved(
-      nodes.select("id"), count(lit(1)).as("n"))
-    val n = mN("n").asInstanceOf[Long].toDouble
-    if (mN("n").asInstanceOf[Long] <= Tuning.broadcastThreshold &&
-        mE("m").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    val (e, nE) = Probe.checkpointCounted(edges.select("src", "dst"))
+    val (idsCk, nN) = Probe.checkpointCounted(nodes.select("id"))
+    val n = nN.toDouble
+    if (Tuning.fits(nN, nE))
       return hitsLocal(idsCk, e, n, iterations)
     var hub = idsCk.withColumn("h", lit(1.0 / n)).localCheckpoint()
     var auth: DataFrame = null
@@ -558,12 +529,9 @@ object Centrality {
   def katz(nodes: DataFrame, edges: DataFrame, iterations: Int,
            alpha: Double = 0.1): DataFrame = {
     require(iterations >= 1, "katz needs >= 1 iteration")
-    val (e, mE) = Probe.checkpointObserved(
-      edges.select("src", "dst"), count(lit(1)).as("m"))
-    val (idsCk, mN) = Probe.checkpointObserved(
-      nodes.select("id"), count(lit(1)).as("n"))
-    if (mN("n").asInstanceOf[Long] <= Tuning.broadcastThreshold &&
-        mE("m").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    val (e, nE) = Probe.checkpointCounted(edges.select("src", "dst"))
+    val (idsCk, nN) = Probe.checkpointCounted(nodes.select("id"))
+    if (Tuning.fits(nN, nE))
       return katzLocal(idsCk, e, iterations, alpha)
     var x = idsCk.withColumn("x", lit(1.0)).localCheckpoint()
     for (_ <- 1 to iterations) {
@@ -587,13 +555,10 @@ object Centrality {
   def eigenvector(nodes: DataFrame, edges: DataFrame,
                   iterations: Int): DataFrame = {
     require(iterations >= 1, "eigenvector needs >= 1 iteration")
-    val (e, mE) = Probe.checkpointObserved(
-      edges.select("src", "dst"), count(lit(1)).as("m"))
-    val (idsCk, mN) = Probe.checkpointObserved(
-      nodes.select("id"), count(lit(1)).as("n"))
-    val n = mN("n").asInstanceOf[Long].toDouble
-    if (mN("n").asInstanceOf[Long] <= Tuning.broadcastThreshold &&
-        mE("m").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    val (e, nE) = Probe.checkpointCounted(edges.select("src", "dst"))
+    val (idsCk, nN) = Probe.checkpointCounted(nodes.select("id"))
+    val n = nN.toDouble
+    if (Tuning.fits(nN, nE))
       return eigenvectorLocal(idsCk, e, n, iterations)
     var x = idsCk.withColumn("x", lit(1.0 / n)).localCheckpoint()
     for (_ <- 1 to iterations) {

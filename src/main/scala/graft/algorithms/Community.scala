@@ -43,29 +43,25 @@ object Community {
     // pipeline feeding dedupClusters) per iteration — measured 34 s vs
     // 4 s for CC over unpersisted candidate pairs at sf0.1. The edge
     // count rides the checkpoint for the regime gate below.
-    val (e, mEc) = Probe.checkpointObserved(
-      symEdges.select("src", "dst"), count(lit(1)).as("n"))
+    val (e, nEc) = Probe.checkpointCounted(symEdges.select("src", "dst"))
     // Node count rides the seed checkpoint (Dataset.observe) — no
     // separate count job for the broadcast gate.
-    val (comp0, mC) = Probe.checkpointObserved(
-      nodes.select(col("id"), col("id").as("component")), count(lit(1)).as("n"))
-    // Dual regime, same gate pattern as SCC/PageRank/coreNumbers: while
-    // nodes AND edges fit the driver gate, one union-find pass over a
-    // packed edge collect replaces O(log n) pointer-doubling rounds of
-    // scheduler floor (and, for callers like dedupClusters, materializes
-    // the upstream pair pipeline exactly once). Reported as one round,
-    // converged — the union-find IS the fixpoint. Past the gate the
-    // hook+shortcut loop below is the 100 TB path; ShuffleRegimeSpec
-    // forces the gate to 0 to pin both regimes to identical output.
-    if (mC("n").asInstanceOf[Long] <= Tuning.broadcastThreshold &&
-        mEc("n").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    val (comp0, nC) = Probe.checkpointCounted(nodes.select(col("id"), col("id").as("component")))
+    // Dual regime: while nodes AND edges fit the driver gate, one
+    // union-find pass over a packed edge collect replaces O(log n)
+    // pointer-doubling rounds of scheduler floor (and, for callers like
+    // dedupClusters, materializes the upstream pair pipeline exactly
+    // once). Reported as one round, converged — the union-find IS the
+    // fixpoint. Past the gate the hook+shortcut loop below is the 100 TB
+    // path; ShuffleRegimeSpec forces the gate to 0 to pin both regimes to
+    // identical output.
+    if (Tuning.fits(nC, nEc))
       return (ccLocal(comp0.select("id"), e), 1, true)
     var comp = comp0
     // Label state is |V| rows — while driver-sized, broadcast it into
     // the hook join (the edge table never moves) and into the shortcut
     // self-join.
-    val small = mC("n").asInstanceOf[Long] <= Tuning.broadcastThreshold
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    def bc(df: DataFrame): DataFrame = Tuning.broadcastIfFits(df, nC)
     var prev: java.math.BigDecimal = null
     var iter = 0
     var done = false
@@ -177,13 +173,12 @@ object Community {
     // Edge count rides the checkpoint for the regime gate (the edge
     // multiset is joined every pass, so one materialization is also the
     // right distributed plan).
-    val (e, mE) = Probe.checkpointObserved(
-      symEdges.select("src", "dst"), count(lit(1)).as("m"))
+    val (e, nE) = Probe.checkpointCounted(symEdges.select("src", "dst"))
     // Dual regime: the synchronous move rule is integer endpoint counts
     // with a deterministic (wt desc, community asc) argmax — exactly
     // replayable on the driver. Past the gate the two-level aggregation
     // below is the 100 TB path.
-    if (mE("m").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    if (Tuning.fits(nE))
       return louvainLocal(e, passes)
     var comm = e.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("community")).localCheckpoint()
@@ -358,7 +353,7 @@ object Community {
       val jumpSide = color.select(col("id").as("cid"), col("chash").as("_jh"),
         col("cid").as("_jc"))
       val jumpMsgs = color.as("a")
-        .join(if (idCount <= Tuning.broadcastThreshold) broadcast(jumpSide) else jumpSide, Seq("cid"))
+        .join(Tuning.broadcastIfFits(jumpSide, idCount), Seq("cid"))
         .select(col("a.id").as("id"), col("_jh").as("chash"), col("_jc").as("cid"))
       // Probe fused into the checkpoint job (Dataset.observe): one job
       // per fixpoint step instead of two.
@@ -384,7 +379,7 @@ object Community {
   private def semiOn(e: DataFrame, keyCol: String, ids: DataFrame,
                      idCount: Long): DataFrame = {
     val probe = ids.withColumnRenamed("id", keyCol)
-    e.join(if (idCount <= Tuning.broadcastThreshold) broadcast(probe) else probe,
+    e.join(Tuning.broadcastIfFits(probe, idCount),
       Seq(keyCol), "left_semi")
   }
 
@@ -438,23 +433,19 @@ object Community {
     // jobs via Dataset.observe — halves the Spark-job count of the
     // fixpoint driver loop, and each saved job is a full scheduler round
     // trip on a real cluster.
-    val (active0, mA) = Probe.checkpointObserved(
-      nodes.select("id"), count(lit(1)).as("n"))
+    val (active0, nTotal) = Probe.checkpointCounted(nodes.select("id"))
     var active = active0
     var out: Option[DataFrame] = None
-    val nTotal = mA("n").asInstanceOf[Long]
-    // Dual regime, same gate pattern as coreNumbers: while BOTH sides
-    // fit the driver gate, one exact O(V+E) iterative Tarjan beats the
-    // trim+double-coloring fixpoint by the per-round scheduler floor ×
-    // its ~tens of rounds (measured 8.5 s → ~0.5 s on the 150k-node
-    // order-ring at sf0.1). Past the gate the coloring kernel below is
-    // the 100 TB path; ShuffleRegimeSpec forces the gate to 0 to pin
-    // both regimes to identical output.
-    if (nTotal <= Tuning.broadcastThreshold) {
-      val (eAll, mEAll) = Probe.checkpointObserved(
-        edges.select("src", "dst").filter(col("src") =!= col("dst")),
-        count(lit(1)).as("n"))
-      if (mEAll("n").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    // Dual regime: while BOTH sides fit the driver gate, one exact O(V+E)
+    // iterative Tarjan beats the trim+double-coloring fixpoint by the
+    // per-round scheduler floor × its ~tens of rounds (measured 8.5 s →
+    // ~0.5 s on the 150k-node order-ring at sf0.1). Past the gate the
+    // coloring kernel below is the 100 TB path; ShuffleRegimeSpec forces
+    // the gate to 0 to pin both regimes to identical output.
+    if (Tuning.fits(nTotal)) {
+      val (eAll, nEAll) = Probe.checkpointCounted(
+        edges.select("src", "dst").filter(col("src") =!= col("dst")))
+      if (Tuning.fits(nEAll))
         return sccLocal(active0, eAll)
     }
     var remaining = nTotal
@@ -462,13 +453,12 @@ object Community {
       val beforeRound = remaining
       dbg(s"round start remaining=$remaining")
       // Active-subgraph edge view (self-loops never extend an SCC).
-      val (e0, mE) = Probe.checkpointObserved(
+      val (e0, nE) = Probe.checkpointCounted(
         semiOn(semiOn(
           edges.select("src", "dst").filter(col("src") =!= col("dst")),
-          "src", active, remaining), "dst", active, remaining),
-        count(lit(1)).as("n"))
+          "src", active, remaining), "dst", active, remaining))
       var e = e0
-      var eCount = mE("n").asInstanceOf[Long]
+      var eCount = nE
       dbg("edge view built")
       // 1. Trim singleton SCCs to a fixpoint. A node survives iff it has
       // both an in- and an out-edge inside the active subgraph — one
@@ -477,14 +467,12 @@ object Community {
       // neither and trim too.
       var trimming = true
       while (trimming && remaining > 0) {
-        val (keep, mK) = Probe.checkpointObserved(
+        val (keep, keepCount) = Probe.checkpointCounted(
           e.select(col("src").as("id"), lit(1).as("o"), lit(0).as("i"))
             .unionByName(e.select(col("dst").as("id"), lit(0).as("o"), lit(1).as("i")))
             .groupBy("id").agg(max("o").as("o"), max("i").as("i"))
             .filter(col("o") === 1 && col("i") === 1)
-            .select("id"),
-          count(lit(1)).as("n"))
-        val keepCount = mK("n").asInstanceOf[Long]
+            .select("id"))
         dbg(s"trim iter keep=$keepCount")
         if (keepCount == remaining) trimming = false
         else {
@@ -493,11 +481,10 @@ object Community {
           out = Some(out.fold(singletons)(_ unionByName singletons).localCheckpoint())
           active = keep
           remaining = keepCount
-          val (e1, mE1) = Probe.checkpointObserved(
-            semiOn(semiOn(e, "src", keep, keepCount), "dst", keep, keepCount),
-            count(lit(1)).as("n"))
+          val (e1, nE1) = Probe.checkpointCounted(
+            semiOn(semiOn(e, "src", keep, keepCount), "dst", keep, keepCount))
           e = e1
-          eCount = mE1("n").asInstanceOf[Long]
+          eCount = nE1
         }
       }
       if (remaining > 0) {
@@ -507,7 +494,7 @@ object Community {
         // stream is Σ deg^k rows and the jump alone must carry the
         // doubling (see minColoring).
         dbg("forward coloring start")
-        val eSmall = eCount <= Tuning.broadcastThreshold
+        val eSmall = Tuning.fits(eCount)
         val hops = if (eCount <= 2L * remaining) 3 else 1
         val colorOf = minColoring(active, e, remaining, eSmall, hops)
           .localCheckpoint()
@@ -520,7 +507,7 @@ object Community {
         // (hash(w),w)), so bcol(v) = cid(v) ⇔ v reaches its root ⇔
         // v ∈ SCC(root). O(log diameter) steps where the old per-hop
         // backward BFS paid one join round per BFS level.
-        val cB = if (remaining <= Tuning.broadcastThreshold) broadcast(colorOf) else colorOf
+        val cB = Tuning.broadcastIfFits(colorOf, remaining)
         val eClass = e
           .join(cB.select(col("id").as("src"), col("cid").as("_cs")), Seq("src"))
           .join(cB.select(col("id").as("dst"), col("cid").as("_cd")), Seq("dst"))
@@ -532,16 +519,16 @@ object Community {
         dbg("backward coloring done")
         val fc = colorOf.withColumnRenamed("cid", "_fc")
         val assigned = bcol
-          .join(if (remaining <= Tuning.broadcastThreshold) broadcast(fc) else fc, Seq("id"))
+          .join(Tuning.broadcastIfFits(fc, remaining), Seq("id"))
           .filter(col("cid") === col("_fc"))
           .select(col("id"), col("cid").as("scc_id"))
           .localCheckpoint()
         // 4. Remove the resolved SCCs and iterate on the remainder.
         out = Some(out.fold(assigned)(_ unionByName assigned).localCheckpoint())
-        val (nextActive, mN) = Probe.checkpointObserved(
-          active.join(assigned, Seq("id"), "left_anti"), count(lit(1)).as("n"))
+        val (nextActive, nN) = Probe.checkpointCounted(
+          active.join(assigned, Seq("id"), "left_anti"))
         active = nextActive
-        remaining = mN("n").asInstanceOf[Long]
+        remaining = nN
       }
       if (remaining >= beforeRound)
         throw new IllegalStateException(
@@ -554,7 +541,7 @@ object Community {
     val relabel0 = raw.groupBy("scc_id").agg(min("id").as("_lbl"))
     // |relabel| ≤ |V|; broadcast while the node set is driver-sized
     // (count already observed on the initial checkpoint — no extra job).
-    val relabel = if (nTotal <= Tuning.broadcastThreshold) broadcast(relabel0) else relabel0
+    val relabel = Tuning.broadcastIfFits(relabel0, nTotal)
     raw.join(relabel, Seq("scc_id"))
       .select(col("id"), col("_lbl").as("scc_id"))
   }
@@ -656,20 +643,17 @@ object Community {
     // Checkpoint the id set once: it is unioned into every iteration and
     // the parquet scan + projection would otherwise re-run per iteration.
     // The node count rides the checkpoint job (Dataset.observe).
-    val (ids, mI) = Probe.checkpointObserved(
-      nodes.select("id"), count(lit(1)).as("n"))
-    val n = mI("n").asInstanceOf[Long].toDouble
-    // Dual regime, same gate pattern as coreNumbers/scc: ten scheduler-
-    // floor iterations on a driver-sized graph lose to one packed
-    // collect by ~7× (measured 7.1 s → ~1 s at sf0.1). Identical
-    // per-iteration arithmetic; float-sum ORDER differs (so do Spark's
-    // own nondeterministic partial aggregations), which both the 8-dp
-    // oracle rounding and ShuffleRegimeSpec's 1e-9 comparison absorb.
+    val (ids, nI) = Probe.checkpointCounted(nodes.select("id"))
+    val n = nI.toDouble
+    // Dual regime: ten scheduler-floor iterations on a driver-sized graph
+    // lose to one packed collect by ~7× (measured 7.1 s → ~1 s at sf0.1).
+    // Identical per-iteration arithmetic; float-sum ORDER differs (so do
+    // Spark's own nondeterministic partial aggregations), which both the
+    // 8-dp oracle rounding and ShuffleRegimeSpec's 1e-9 comparison absorb.
     // Past the gate the iterative plan below is the 100 TB path.
-    if (mI("n").asInstanceOf[Long] <= Tuning.broadcastThreshold) {
-      val (eAll, mEAll) = Probe.checkpointObserved(
-        edges.select("src", "dst"), count(lit(1)).as("n"))
-      if (mEAll("n").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    if (Tuning.fits(nI)) {
+      val (eAll, nEAll) = Probe.checkpointCounted(edges.select("src", "dst"))
+      if (Tuning.fits(nEAll))
         return pageRankLocal(ids, eAll, n, damping, iterations)
     }
     val e = edges.select("src", "dst")
@@ -687,7 +671,7 @@ object Community {
     // outputPartitioning, rank is hash-partitioned by its groupBy), so
     // each iteration shuffles only the contribution groupBy, never the
     // edges.
-    val small = n <= Tuning.broadcastThreshold
+    val small = Tuning.fits(nI)
     val outdeg = if (small) broadcast(outdeg0) else outdeg0
     val eDeg0 = e.join(outdeg, Seq("src"))
     val eDeg = (if (small) eDeg0 else eDeg0.repartition(col("src")))
@@ -740,18 +724,15 @@ object Community {
     * a 625-edge graph is pure scheduler floor distributed. */
   def weightedPageRank(nodes: DataFrame, wedges: DataFrame,
                        damping: Double, iterations: Int): DataFrame = {
-    val (ids, mI) = Probe.checkpointObserved(
-      nodes.select("id"), count(lit(1)).as("n"))
-    val n = mI("n").asInstanceOf[Long].toDouble
-    val (e, mE) = Probe.checkpointObserved(
+    val (ids, nI) = Probe.checkpointCounted(nodes.select("id"))
+    val n = nI.toDouble
+    val (e, nE) = Probe.checkpointCounted(
       wedges.select(col("src"), col("dst"),
-        col("cnt").cast("double").as("w")),
-      count(lit(1)).as("m"))
-    if (mI("n").asInstanceOf[Long] <= Tuning.broadcastThreshold &&
-        mE("m").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+        col("cnt").cast("double").as("w")))
+    if (Tuning.fits(nI, nE))
       return weightedPageRankLocal(ids, e, n, damping, iterations)
     val wsum0 = e.groupBy(col("src").as("src")).agg(sum(col("w")).as("wsum"))
-    val small = n <= Tuning.broadcastThreshold
+    val small = Tuning.fits(nI)
     val wsum = if (small) broadcast(wsum0) else wsum0
     val eW0 = e.join(wsum, Seq("src"))
     val eW = (if (small) eW0 else eW0.repartition(col("src")))
@@ -911,18 +892,16 @@ object Community {
                            sources: Seq[Long], damping: Double,
                            iterations: Int): DataFrame = {
     require(sources.nonEmpty, "personalized PageRank needs >= 1 source")
-    val (ids, mI) = Probe.checkpointObserved(
-      nodes.select("id"), count(lit(1)).as("n"))
-    if (mI("n").asInstanceOf[Long] <= Tuning.broadcastThreshold) {
-      val (eAll, mEAll) = Probe.checkpointObserved(
-        edges.select("src", "dst"), count(lit(1)).as("n"))
-      if (mEAll("n").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    val (ids, nI) = Probe.checkpointCounted(nodes.select("id"))
+    if (Tuning.fits(nI)) {
+      val (eAll, nEAll) = Probe.checkpointCounted(edges.select("src", "dst"))
+      if (Tuning.fits(nEAll))
         return pprLocal(ids, eAll, sources, damping, iterations)
     }
     val s = sources.size.toDouble
     val isSrc = col("id").isin(sources: _*)
     val e = edges.select("src", "dst")
-    val small = mI("n").asInstanceOf[Long] <= Tuning.broadcastThreshold
+    val small = Tuning.fits(nI)
     val outdeg0 = e.groupBy(col("src").as("src")).agg(count(lit(1)).as("odeg"))
     val outdeg = if (small) broadcast(outdeg0) else outdeg0
     val eDeg0 = e.join(outdeg, Seq("src"))
@@ -1036,12 +1015,9 @@ object Community {
     * fixpoint here. Dual regime under the standard driver gate. */
   def labelPropagation(nodes: DataFrame, symEdges: DataFrame,
                        iterations: Int): DataFrame = {
-    val (ids, mI) = Probe.checkpointObserved(
-      nodes.select("id"), count(lit(1)).as("n"))
-    val (e, mE) = Probe.checkpointObserved(
-      symEdges.select("src", "dst"), count(lit(1)).as("m"))
-    if (mI("n").asInstanceOf[Long] <= Tuning.broadcastThreshold &&
-        mE("m").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    val (ids, nI) = Probe.checkpointCounted(nodes.select("id"))
+    val (e, nE) = Probe.checkpointCounted(symEdges.select("src", "dst"))
+    if (Tuning.fits(nI, nE))
       return lpaLocal(ids, e, iterations)
     var labels = ids.withColumn("label", col("id")).localCheckpoint()
     for (_ <- 1 to iterations) {

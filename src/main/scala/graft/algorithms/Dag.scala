@@ -34,7 +34,7 @@ object Dag {
     * dist 0. Throws if no fixpoint within `maxRounds` (cycle).
     *
     * Dual regime like the other iterative kernels: under
-    * [[Tuning.broadcastThreshold]] the relaxation runs as a packed
+    * the [[Tuning]] gate the relaxation runs as a packed
     * driver loop (a depth-round fixpoint on a tiny graph is pure
     * scheduler floor distributed); past the gate the frontier joins
     * below are the 100 TB path. Both branches compute the identical
@@ -54,10 +54,8 @@ object Dag {
         mE("wmin").asInstanceOf[Long] >= 1L,
       "longestPaths needs strictly positive integer weights (w >= 1): " +
         "a zero-weight cycle would converge and defeat cycle detection")
-    val (n0, mN) = Probe.checkpointObserved(
-      nodes.select(col("id")).distinct(), count(lit(1)).as("n"))
-    if (mE("m").asInstanceOf[Long] <= Tuning.broadcastThreshold &&
-        mN("n").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    val (n0, nN) = Probe.checkpointCounted(nodes.select(col("id")).distinct())
+    if (Tuning.fits(mE("m").asInstanceOf[Long], nN))
       return longestPathsLocal(n0, e, maxRounds)
     var best = n0.withColumn("dist", lit(0L)).localCheckpoint()
     var frontier = best
@@ -71,12 +69,11 @@ object Dag {
         .select(e("dst").as("id"), (frontier("dist") + e("w")).as("cd"))
         .groupBy("id").agg(max("cd").as("cd"))
       // Improvement probe rides the checkpoint job (one job per round).
-      val (imp, m) = Probe.checkpointObserved(
+      val (imp, nImp) = Probe.checkpointCounted(
         cand.join(best, Seq("id"))
           .filter(col("cd") > col("dist"))
-          .select(col("id"), col("cd").as("dist")),
-        count(lit(1)).as("n"))
-      improved = m("n").asInstanceOf[Long]
+          .select(col("id"), col("cd").as("dist")))
+      improved = nImp
       if (improved > 0) {
         best = best.join(imp.withColumnRenamed("dist", "nd"), Seq("id"), "left")
           .select(col("id"), coalesce(col("nd"), col("dist")).as("dist"))

@@ -29,18 +29,15 @@ object Independent {
   def maximalIndependentSet(nodes: DataFrame, symEdges: DataFrame,
                             maxRounds: Int = 60): DataFrame = {
     val spark = nodes.sparkSession
-    val (e0, mE) = Probe.checkpointObserved(
-      symEdges.select("src", "dst"), count(lit(1)).as("m"))
-    val (n0, mN) = Probe.checkpointObserved(
+    val (e0, nE) = Probe.checkpointCounted(symEdges.select("src", "dst"))
+    val (n0, nN) = Probe.checkpointCounted(
       nodes.select(col("id"),
         graft.pipeline.TextOps.hash60(col("id").cast("string"), "mis:")
-          .as("h")),
-      count(lit(1)).as("n"))
-    if (mN("n").asInstanceOf[Long] <= Tuning.broadcastThreshold &&
-        mE("m").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+          .as("h")))
+    if (Tuning.fits(nN, nE))
       return misLocal(spark, n0, e0)
     var undecided = n0
-    var nUndecided = mN("n").asInstanceOf[Long]
+    var nUndecided = nN
     var e = e0
     var mis: DataFrame = null
     var round = 0
@@ -63,11 +60,9 @@ object Independent {
         .unionByName(e.join(sel.withColumnRenamed("id", "src"), Seq("src"),
           "left_semi").select(col("dst").as("id")))
         .distinct().localCheckpoint()
-      val (u, mU) = Probe.checkpointObserved(
-        undecided.join(removed, Seq("id"), "left_anti"),
-        count(lit(1)).as("n"))
+      val (u, nU) = Probe.checkpointCounted(undecided.join(removed, Seq("id"), "left_anti"))
       undecided = u
-      nUndecided = mU("n").asInstanceOf[Long]
+      nUndecided = nU
       e = e.join(removed.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
         .join(removed.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
         .localCheckpoint()
@@ -91,18 +86,15 @@ object Independent {
   def greedyColoring(nodes: DataFrame, symEdges: DataFrame,
                      maxRounds: Int = 120): DataFrame = {
     val spark = nodes.sparkSession
-    val (e0, mE) = Probe.checkpointObserved(
-      symEdges.select("src", "dst"), count(lit(1)).as("m"))
-    val (n0, mN) = Probe.checkpointObserved(
+    val (e0, nE) = Probe.checkpointCounted(symEdges.select("src", "dst"))
+    val (n0, nN) = Probe.checkpointCounted(
       nodes.select(col("id"),
         graft.pipeline.TextOps.hash60(col("id").cast("string"), "mis:")
-          .as("h")),
-      count(lit(1)).as("n"))
-    if (mN("n").asInstanceOf[Long] <= Tuning.broadcastThreshold &&
-        mE("m").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+          .as("h")))
+    if (Tuning.fits(nN, nE))
       return colorLocal(spark, n0, e0)
     var undecided = n0
-    var nUndecided = mN("n").asInstanceOf[Long]
+    var nUndecided = nN
     // src-side frame of edges whose src is still undecided (the dst
     // side keeps colored nodes — mex needs them)
     var e = e0
@@ -138,11 +130,9 @@ object Independent {
         .localCheckpoint()
       colored = if (colored == null) withMex
                 else colored.unionByName(withMex)
-      val (u, mU) = Probe.checkpointObserved(
-        undecided.join(sel, Seq("id"), "left_anti"),
-        count(lit(1)).as("n"))
+      val (u, nU) = Probe.checkpointCounted(undecided.join(sel, Seq("id"), "left_anti"))
       undecided = u
-      nUndecided = mU("n").asInstanceOf[Long]
+      nUndecided = nU
       e = e.join(sel.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
         .localCheckpoint()
     }

@@ -59,7 +59,7 @@ object LinkPrediction {
     // broadcastable dim at test SFs and a shuffle join past it
     val nV = deg.count()
     def degSide(dim: DataFrame): DataFrame =
-      if (nV <= Tuning.broadcastThreshold) broadcast(dim) else dim
+      Tuning.broadcastIfFits(dim, nV)
     val centers0 = deg.select(col("id").as("w"), col("deg").as("wdeg"))
     val centers = if (hubCap > 0) centers0.filter(col("wdeg") <= hubCap)
                   else centers0
@@ -79,7 +79,7 @@ object LinkPrediction {
     // degrades to shuffle joins, never a driver OOM
     val aCnt = if (focal.isDefined) aSide.count() else Long.MaxValue
     def focalSide(dim: DataFrame): DataFrame =
-      if (aCnt <= Tuning.broadcastThreshold) broadcast(dim) else dim
+      Tuning.broadcastIfFits(dim, aCnt)
     val aCentered0 = aSide.join(degSide(centers), Seq("w"))
     val aCentered =
       if (focal.isDefined) focalSide(aCentered0) else aCentered0

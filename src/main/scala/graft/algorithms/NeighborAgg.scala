@@ -25,8 +25,7 @@ object NeighborAgg {
   def aggregate(nodeFeatures: DataFrame, edges: DataFrame,
                 features: Seq[String], hops: Int = 2): DataFrame = {
     require(hops >= 1, "need >= 1 hop")
-    val (e, _) = Probe.checkpointObserved(
-      edges.select("src", "dst"), count(lit(1)).as("m"))
+    val (e, _) = Probe.checkpointCounted(edges.select("src", "dst"))
     var cur = nodeFeatures.select(
       col("id") +: features.map(f => col(f).cast("double").as(f)): _*)
     for (h <- 1 to hops) {

@@ -60,20 +60,17 @@ object Paths {
                        maxDepth: Int = 10): DataFrame = {
     val ss = edges.sparkSession
     // Edge count rides the checkpoint for the regime gate.
-    val (e, mE) = Probe.checkpointObserved(
-      edges.select(col("src"), col("dst"), col("rel_type")),
-      count(lit(1)).as("m"))
+    val (e, nE) = Probe.checkpointCounted(edges.select(col("src"), col("dst"), col("rel_type")))
     def emptyOut = ss.range(0)
       .select(lit("").as("path"), lit("").as("rels"), lit(0L).as("hops"))
     if (srcId == dstId)
       return ss.range(1)
         .select(lit(srcId.toString).as("path"), lit("").as("rels"), lit(0L).as("hops"))
-    // Dual regime, same gate pattern as the other traversal kernels:
-    // the parent-level BFS and the backward unwind are one scheduler-
-    // floor join per level each way; the driver replay records the same
-    // per-parallel-edge parent rows and enumerates the same path set.
-    // Past the gate the level joins below are the 100 TB path.
-    if (mE("m").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    // Dual regime: the parent-level BFS and the backward unwind are one
+    // scheduler-floor join per level each way; the driver replay records
+    // the same per-parallel-edge parent rows and enumerates the same path
+    // set. Past the gate the level joins below are the 100 TB path.
+    if (Tuning.fits(nE))
       return allShortestPathsLocal(e, srcId, dstId, maxDepth)
     var visited = ss.range(1).select(lit(srcId).as("id")).localCheckpoint()
     var frontier = visited

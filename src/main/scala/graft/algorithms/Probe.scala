@@ -1,6 +1,7 @@
 package graft.algorithms
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Checkpoint-fused convergence probes for iterative kernels.
   *
@@ -25,5 +26,13 @@ object Probe {
     val obs = Observation()
     val out = df.observe(obs, first, rest: _*).localCheckpoint()
     (out, obs.get)
+  }
+
+  /** `df.localCheckpoint()` plus its row count, observed in the same
+    * job — the size every regime gate ([[Tuning.fits]]) and most
+    * drain/fixpoint probes read. */
+  def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val (out, m) = checkpointObserved(df, count(lit(1)).as("n"))
+    (out, m("n").asInstanceOf[Long])
   }
 }

@@ -29,12 +29,9 @@ object RandomWalks {
     require(length >= 1 && perNode >= 1, "need length >= 1 and perNode >= 1")
     // simple-graph view: multi-edges would not change the argmin (same
     // (v,u) string hashes equal) but would inflate the join
-    val (e, mE) = Probe.checkpointObserved(
-      edges.select("src", "dst").distinct(), count(lit(1)).as("m"))
-    val (srcs, mS) = Probe.checkpointObserved(
-      sources.select("id"), count(lit(1)).as("n"))
-    if (mS("n").asInstanceOf[Long] <= Tuning.broadcastThreshold &&
-        mE("m").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    val (e, nE) = Probe.checkpointCounted(edges.select("src", "dst").distinct())
+    val (srcs, nS) = Probe.checkpointCounted(sources.select("id"))
+    if (Tuning.fits(nS, nE))
       return walksLocal(srcs, e, length, perNode)
     var state = srcs
       .select(col("id").as("start"),

@@ -28,17 +28,13 @@ object SimRank {
   def simRank(nodes: DataFrame, edges: DataFrame, iters: Int,
               c: Double = 0.8): DataFrame = {
     require(iters >= 1, "simRank needs iters >= 1")
-    val (n, mN) = Probe.checkpointObserved(
-      nodes.select(col("id")).distinct(), count(lit(1)).as("n"))
-    val (e, mE) = Probe.checkpointObserved(
-      edges.select(col("src"), col("dst")).distinct(), count(lit(1)).as("m"))
+    val (n, nN) = Probe.checkpointCounted(nodes.select(col("id")).distinct())
+    val (e, nE) = Probe.checkpointCounted(edges.select(col("src"), col("dst")).distinct())
     // Dual regime: the pair STATE is n², so the gate is on n² (plus
     // the edge count for the packed arrays). A 5-deep pair fixpoint on
     // a tiny graph is pure scheduler floor distributed; past the gate
     // the pair-frame joins below are the 100 TB (focal-set) path.
-    val nN = mN("n").asInstanceOf[Long]
-    if (nN * nN <= Tuning.broadcastThreshold &&
-        mE("m").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    if (Tuning.fitsProduct(nN, nN) && Tuning.fits(nE))
       return simRankLocal(n, e, iters, c)
     val indeg = e.groupBy(col("dst").as("id")).agg(count(lit(1)).as("d"))
     val allPairs = n.select(col("id").as("a"))

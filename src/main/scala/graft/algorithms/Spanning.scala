@@ -32,11 +32,10 @@ object Spanning {
     * so no node frame is needed; components emerge from the edge set. */
   def minimumSpanningForest(wedges: DataFrame, maxRounds: Int = 40): DataFrame = {
     val spark = wedges.sparkSession
-    val (e0, mE) = Probe.checkpointObserved(
+    val (e0, nE) = Probe.checkpointCounted(
       wedges.select(col("a").cast("long").as("a"),
-        col("b").cast("long").as("b"), col("w").cast("long").as("w")),
-      count(lit(1)).as("n"))
-    if (mE("n").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+        col("b").cast("long").as("b"), col("w").cast("long").as("w")))
+    if (Tuning.fits(nE))
       return mstLocal(spark, e0)
     var labels = e0
       .select(explode(array(col("a"), col("b"))).as("id")).distinct()

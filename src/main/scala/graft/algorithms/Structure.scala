@@ -84,12 +84,8 @@ object Structure {
   def modularity(pedges: DataFrame, groups: DataFrame): DataFrame = {
     val sym = pedges.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(pedges.select(col("b").as("src"), col("a").as("dst")))
-    val (grp, mG) = Probe.checkpointObserved(
-      groups.select(col("id"), col("g")), count(lit(1)).as("n"))
-    def dim(df: DataFrame): DataFrame =
-      if (mG("n").asInstanceOf[Long] <= Tuning.broadcastThreshold)
-        broadcast(df)
-      else df
+    val (grp, nG) = Probe.checkpointCounted(groups.select(col("id"), col("g")))
+    def dim(df: DataFrame): DataFrame = Tuning.broadcastIfFits(df, nG)
     val tagged = sym
       .join(dim(grp.select(col("id").as("src"), col("g").as("gs"))), Seq("src"))
       .join(dim(grp.select(col("id").as("dst"), col("g").as("gd"))), Seq("dst"))
@@ -121,12 +117,8 @@ object Structure {
   def conductance(pedges: DataFrame, groups: DataFrame): DataFrame = {
     val sym = pedges.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(pedges.select(col("b").as("src"), col("a").as("dst")))
-    val (grp, mG) = Probe.checkpointObserved(
-      groups.select(col("id"), col("g")), count(lit(1)).as("n"))
-    def dim(df: DataFrame): DataFrame =
-      if (mG("n").asInstanceOf[Long] <= Tuning.broadcastThreshold)
-        broadcast(df)
-      else df
+    val (grp, nG) = Probe.checkpointCounted(groups.select(col("id"), col("g")))
+    def dim(df: DataFrame): DataFrame = Tuning.broadcastIfFits(df, nG)
     val per = sym
       .join(dim(grp.select(col("id").as("src"), col("g").as("gs"))), Seq("src"))
       .join(dim(grp.select(col("id").as("dst"), col("g").as("gd"))), Seq("dst"))
@@ -378,14 +370,11 @@ object Structure {
     * depth (the cascade length, typically ≪ |V|; maxWaves guards
     * pathological chains). Returns (id, core, layer). */
   def onionLayers(symEdges: DataFrame, maxWaves: Int = 300): DataFrame = {
-    val (e, mE) = Probe.checkpointObserved(
-      symEdges.select("src", "dst"), count(lit(1)).as("m"))
-    if (mE("m").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    val (e, nE) = Probe.checkpointCounted(symEdges.select("src", "dst"))
+    if (Tuning.fits(nE))
       return onionLocal(e)
-    var (alive, aM) = Probe.checkpointObserved(
-      e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")),
-      count(lit(1)).as("n"))
-    var nAlive = aM("n").asInstanceOf[Long]
+    var (alive, nAlive) = Probe.checkpointCounted(
+      e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")))
     var ecur = e
     var c = 0L
     var layer = 0L
@@ -405,12 +394,11 @@ object Structure {
         .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi")
         .localCheckpoint()
       val dg = ecur.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-      val (a2, m2) = Probe.checkpointObserved(
+      val (a2, n2) = Probe.checkpointCounted(
         keep.join(dg, Seq("id"), "left_outer")
-          .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg")),
-        count(lit(1)).as("n"))
+          .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg")))
       alive = a2
-      nAlive = m2("n").asInstanceOf[Long]
+      nAlive = n2
     }
     waves.reduceOption(_ unionByName _)
       .getOrElse(e.sparkSession.emptyDataFrame
@@ -477,16 +465,11 @@ object Structure {
       .select(col("e.id").as("id"), col("e.nb").as("nb"))
     // (id, nb, multiplicity): deg and the neighbor-degree join both
     // consume it — materialize once (the assortativity discipline)
-    val (pairs, _) = Probe.checkpointObserved(
-      sym.groupBy("id", "nb").agg(count(lit(1)).as("mult")),
-      count(lit(1)).as("n"))
-    val (deg, mD) = Probe.checkpointObserved(
-      pairs.groupBy("id").agg(sum("mult").as("deg")),
-      count(lit(1)).as("n"))
-    def dim(df: DataFrame): DataFrame =
-      if (mD("n").asInstanceOf[Long] <= Tuning.broadcastThreshold)
-        broadcast(df)
-      else df
+    val (pairs, _) = Probe.checkpointCounted(
+      sym.groupBy("id", "nb").agg(count(lit(1)).as("mult")))
+    val (deg, nD) = Probe.checkpointCounted(
+      pairs.groupBy("id").agg(sum("mult").as("deg")))
+    def dim(df: DataFrame): DataFrame = Tuning.broadcastIfFits(df, nD)
     val feats = pairs
       .join(dim(deg.select(col("id").as("nb"), col("deg").as("nd"))), Seq("nb"))
       .groupBy("id")
@@ -507,10 +490,9 @@ object Structure {
     // identical subtrees at runtime (measured: pin is time-neutral at
     // sf0.1) — the ≤|V|-row pin makes single execution unconditional
     // instead of reuse-dependent across AQE boundaries.
-    val (labelSig, _) = Probe.checkpointObserved(
+    val (labelSig, _) = Probe.checkpointCounted(
       full.groupBy((col("label") +: sigCols.map(col)): _*)
-        .agg(count(lit(1)).as("lcnt")),
-      count(lit(1)).as("n"))
+        .agg(count(lit(1)).as("lcnt")))
     val cls = labelSig.groupBy(sigCols.map(col): _*)
       .agg(sum("lcnt").as("csize"))
     labelSig.join(cls, sigCols)
@@ -531,13 +513,9 @@ object Structure {
     // the degree table is consumed twice and costs a full-edge shuffle
     // to derive — materialize once; |V| gates the broadcast like every
     // kernel dim join
-    val (deg, mD) = Probe.checkpointObserved(
-      sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")),
-      count(lit(1)).as("n"))
-    def dim(df: DataFrame): DataFrame =
-      if (mD("n").asInstanceOf[Long] <= Tuning.broadcastThreshold)
-        broadcast(df)
-      else df
+    val (deg, nD) = Probe.checkpointCounted(
+      sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")))
+    def dim(df: DataFrame): DataFrame = Tuning.broadcastIfFits(df, nD)
     val xy = sym
       .join(dim(deg.select(col("id").as("src"), col("deg").as("x"))), Seq("src"))
       .join(dim(deg.select(col("id").as("dst"), col("deg").as("y"))), Seq("dst"))
@@ -584,6 +562,15 @@ object Structure {
     * subgraph — equal to the exact answer whenever maxDeg ≥ the max
     * degree (spec-pinned). Audit what a cap dropped with
     * [[degreeHubs]]. Default uncapped (exact). */
+  /** Gate for the fused sorted-adjacency intersect plan in
+    * [[edgeSupport]]: the plan's exact comparison count is Σ deg²,
+    * measured in the same job that builds the degree frame; at or below
+    * this many comparisons the fused plan (fewest stages) wins, above it
+    * the degree-ordered O(m^1.5) triangle closure takes over. 2e9
+    * long-compares ≈ a few seconds across one executor's cores —
+    * per-partition work stays bounded either way. */
+  private val IntersectCostMax = 2000000000L
+
   /** Internal shared body for [[edgeSupport]]/[[edgeJaccard]]: returns
     * (pe, deg, support, fits) — the materialized (post-cap) edge list,
     * its materialized degree frame, the per-edge support plan, and
@@ -606,8 +593,7 @@ object Structure {
     val pe0 = knownDistinctEdges match {
       case Some(_) => pedges.select("a", "b")
       case None if assumeDistinct => pedges.select("a", "b")
-      case None => Probe.checkpointObserved(
-        pedges.select("a", "b").distinct(), count(lit(1)).as("n"))._1
+      case None => Probe.checkpointCounted(pedges.select("a", "b").distinct())._1
     }
     def degOf(e: DataFrame) = e.select(col("a").as("v"))
       .unionByName(e.select(col("b").as("v")))
@@ -626,7 +612,7 @@ object Structure {
       val (m, s2) = gateStats(pe0)
       (knownDistinctEdges.getOrElse(m), s2)
     }
-    val fits = nEdges <= Tuning.broadcastThreshold
+    val fits = Tuning.fits(nEdges)
     val (pe, sumDeg2) =
       if (maxDeg == Long.MaxValue) (pe0, sd20)
       else {
@@ -637,17 +623,16 @@ object Structure {
         // measured 3.8 → 9.0 s on the capped bench row (round 15).
         val kept = degOf(pe0).filter(col("d") <= maxDeg).select("v")
         val keptJ = if (fits) broadcast(kept) else kept
-        val e = Probe.checkpointObserved(pe0
+        val e = Probe.checkpointCounted(pe0
           .join(keptJ.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
-          .join(keptJ.withColumnRenamed("v", "b"), Seq("b"), "left_semi"),
-          count(lit(1)).as("n"))._1
+          .join(keptJ.withColumnRenamed("v", "b"), Seq("b"), "left_semi"))._1
         (e, gateStats(e)._2)
       }
     // the support frame always carries the endpoint degrees (da, db) —
     // free from the arrays in the fused plan, two dim joins in the
     // closure plan — so edgeJaccard never pays its own degree pass
     val support =
-      if (sumDeg2 <= Tuning.intersectCostThreshold && fits) {
+      if (sumDeg2 <= IntersectCostMax && fits) {
         // PLAN A (measured-cheap): one adjacency groupBy into sorted
         // arrays + two joins + the native codegen'd intersect count per
         // edge. Work = Σ (deg a + deg b) per edge = Σ d² — the EXACT
@@ -826,9 +811,8 @@ object Structure {
       .filter(col("a") =!= col("b")).localCheckpoint()
     val sym = und.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-    val (deg, _) = Probe.checkpointObserved(
-      sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")),
-      count(lit(1)).as("n"))
+    val (deg, _) = Probe.checkpointCounted(
+      sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")))
     // every arm's edge view is a filter on the max endpoint degree —
     // annotate once (two degree joins), then each arm is codegen
     val symE = sym
@@ -1099,16 +1083,12 @@ object Structure {
     // plan on the small ones it iterates over
     def supportOf(e: DataFrame, nE: Long): DataFrame =
       edgeSupport(e, knownDistinctEdges = Some(nE))
-    var (e, m0) = Probe.checkpointObserved(
-      pedges.select("a", "b").distinct(), count(lit(1)).as("n"))
-    var nE = m0("n").asInstanceOf[Long]
+    var (e, nE) = Probe.checkpointCounted(pedges.select("a", "b").distinct())
     var round = 0
     while (round < maxRounds) {
       round += 1
-      val (keep, mK) = Probe.checkpointObserved(
-        supportOf(e, nE).filter(col("support") >= k - 2).select("a", "b"),
-        count(lit(1)).as("n"))
-      val nKeep = mK("n").asInstanceOf[Long]
+      val (keep, nKeep) = Probe.checkpointCounted(
+        supportOf(e, nE).filter(col("support") >= k - 2).select("a", "b"))
       if (nKeep == nE)
         return supportOf(e, nE).select(col("a"), col("b"),
           col("support").cast("long").as("support")).orderBy("a", "b")
@@ -1127,14 +1107,12 @@ object Structure {
     * are bounded by O(√m), keeping the wedge join at O(m^1.5) even on
     * skewed graphs. The (x,y,z) labels depend on the orientation but the
     * triangle node-sets (and thus all counts) do not. */
-  def triangles(pedges: DataFrame,
-                broadcastCloseMaxEdges: Long = Tuning.broadcastThreshold): DataFrame = {
+  def triangles(pedges: DataFrame): DataFrame = {
     // The edge count for the broadcast gate rides the edge-list
     // checkpoint (Dataset.observe) — no bare count job, and the four
     // consumers below (degree build, two orientation joins, adjacency)
     // probe the materialized list instead of re-running its upstream.
-    val (pe, mE) = Probe.checkpointObserved(
-      pedges.select("a", "b"), count(lit(1)).as("n"))
+    val (pe, nE) = Probe.checkpointCounted(pedges.select("a", "b"))
     val deg = pe.select(col("a").as("v"))
       .unionByName(pe.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("d"))
@@ -1143,7 +1121,7 @@ object Structure {
     // is a map-only pipeline over the cached edge list, not two shuffle
     // joins re-run per consumer. Above the threshold (driver memory
     // guard) it falls back to shuffle joins.
-    val fits = mE("n").asInstanceOf[Long] <= broadcastCloseMaxEdges
+    val fits = Tuning.fits(nE)
     val degJ = if (fits) broadcast(deg) else deg
     val o = pe
       .join(degJ.select(col("v").as("a"), col("d").as("da")), Seq("a"))
@@ -1163,7 +1141,7 @@ object Structure {
     // plan's biggest frame is |E| rows carrying per-node arrays bounded
     // by the O(√m) oriented out-degree (measured 23 s → 9 s for the
     // q_clustering chain at sf0.1). While the edge set fits an executor
-    // (≤ broadcastCloseMaxEdges rows ⇒ arrays total ~8B·|E|), the
+    // (edges within the gate ⇒ arrays total ~8B·|E|), the
     // adjacency frame is broadcast so edges never shuffle; past that it
     // becomes a key-partitioned shuffle join — decided by a cheap count
     // on the (usually cached) oriented edge list.
@@ -1186,13 +1164,10 @@ object Structure {
     * aggregation is the 100 TB path (a 3-branch union would re-run the
     * wedge join once per corner); ShuffleRegimeSpec pins both regimes
     * to identical output. */
-  def trianglesPerNode(pedges: DataFrame,
-                       broadcastCloseMaxEdges: Long = Tuning.broadcastThreshold): DataFrame = {
-    val (pe, mE) = Probe.checkpointObserved(
-      pedges.select("a", "b"), count(lit(1)).as("n"))
-    if (mE("n").asInstanceOf[Long] <= broadcastCloseMaxEdges)
-      triangleCountsLocal(pe)
-    else perNodeCounts(triangles(pe, broadcastCloseMaxEdges))
+  def trianglesPerNode(pedges: DataFrame): DataFrame = {
+    val (pe, nE) = Probe.checkpointCounted(pedges.select("a", "b"))
+    if (Tuning.fits(nE)) triangleCountsLocal(pe)
+    else perNodeCounts(triangles(pe))
   }
 
   /** Driver-side triangle counting: orient each undirected (a<b) edge
@@ -1292,15 +1267,13 @@ object Structure {
     // fixed-round oracle matches by construction either way; early
     // convergence when nothing dies (all remaining rounds are no-ops).
     // Edge count rides the checkpoint for the regime gate (one job).
-    val (e, mE) = Probe.checkpointObserved(
-      symEdges.select("src", "dst"), count(lit(1)).as("m"))
-    // Dual regime, same gate pattern as coreNumbers/SCC/CC/PageRank:
-    // while the edge list fits the driver gate, run the synchronous
-    // peel over a packed edge collect — each distributed round costs a
-    // scheduler floor and the peel depth is tens of rounds on real
+    val (e, nE) = Probe.checkpointCounted(symEdges.select("src", "dst"))
+    // Dual regime: while the edge list fits the driver gate, run the
+    // synchronous peel over a packed edge collect — each distributed round
+    // costs a scheduler floor and the peel depth is tens of rounds on real
     // graphs. Past the gate the delta peel below is the 100 TB path;
     // ShuffleRegimeSpec forces the gate to 0 to pin both regimes.
-    if (mE("m").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    if (Tuning.fits(nE))
       return kcoreLocal(e, k, rounds)
     var deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
       .localCheckpoint()
@@ -1310,12 +1283,10 @@ object Structure {
       r += 1
       // Count rides the checkpoint job (Dataset.observe) — one job per
       // peel round instead of two.
-      val (dead, mD) = Probe.checkpointObserved(
-        deg.filter(col("d") < k).select("id"), count(lit(1)).as("n"))
-      val deadCount = mD("n").asInstanceOf[Long]
+      val (dead, deadCount) = Probe.checkpointCounted(deg.filter(col("d") < k).select("id"))
       if (deadCount == 0L) converged = true
       else {
-        val db = if (deadCount <= Tuning.broadcastThreshold) broadcast(dead) else dead
+        val db = Tuning.broadcastIfFits(dead, deadCount)
         val decr = e.join(db.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
           .groupBy(col("dst").as("id")).agg(count(lit(1)).as("dec"))
         deg = deg.join(db, Seq("id"), "left_anti")
@@ -1390,25 +1361,20 @@ object Structure {
     * h-index convergence depth — small on dense/low-diameter graphs,
     * O(diameter) worst case on long paths, guarded by `maxIter`. */
   def coreNumbers(symEdges: DataFrame, maxIter: Int = 50): DataFrame = {
-    // Dual regime, same gate pattern as CC/SCC/PageRank/triangles: while
-    // the (symmetric) edge list fits the driver gate, run the exact
-    // O(m) Batagelj–Zaversnik bucket peel locally — the h-index
-    // iteration's convergence depth is O(propagation diameter) and each
-    // distributed round costs a scheduler floor, so on a driver-sized
+    // Dual regime: while the (symmetric) edge list fits the driver gate,
+    // run the exact O(m) Batagelj–Zaversnik bucket peel locally — the
+    // h-index iteration's convergence depth is O(propagation diameter) and
+    // each distributed round costs a scheduler floor, so on a driver-sized
     // graph 38 tiny rounds lose to one collect by an order of magnitude
-    // (measured 37.6 s → ~2 s at sf0.1). Past the gate the delta
-    // h-index below is the 100 TB path (per-round floors amortize once
-    // rounds carry real data); ShuffleRegimeSpec forces the gate to 0
-    // to pin both regimes to identical output.
-    val (e, mE) = Probe.checkpointObserved(
-      symEdges.select("src", "dst"), count(lit(1)).as("m"))
-    if (mE("m").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    // (measured 37.6 s → ~2 s at sf0.1). Past the gate the delta h-index
+    // below is the 100 TB path (per-round floors amortize once rounds
+    // carry real data); ShuffleRegimeSpec forces the gate to 0 to pin both
+    // regimes to identical output.
+    val (e, nE) = Probe.checkpointCounted(symEdges.select("src", "dst"))
+    if (Tuning.fits(nE))
       return corePeelLocal(e)
-    val (c0, m0) = Probe.checkpointObserved(
-      e.groupBy(col("src").as("id")).agg(count(lit(1)).as("c")),
-      count(lit(1)).as("n"))
-    val n = m0("n").asInstanceOf[Long]
-    val small = n <= Tuning.broadcastThreshold
+    val (c0, n) = Probe.checkpointCounted(
+      e.groupBy(col("src").as("id")).agg(count(lit(1)).as("c")))
     val w = Window.partitionBy("src").orderBy(col("cn").desc)
     // Delta rounds: a node's h can move only if some neighbor's value
     // changed last round, so each round recomputes H over the edges
@@ -1427,15 +1393,15 @@ object Structure {
       if (it > maxIter) throw new IllegalStateException(
         s"coreNumbers did not converge within $maxIter h-index rounds")
       val ch = c.filter(col("chg") === 1L).select(col("id").as("dst"))
-      val chB = if (nChanged <= Tuning.broadcastThreshold) broadcast(ch) else ch
+      val chB = Tuning.broadcastIfFits(ch, nChanged)
       val affected = e.join(chB, Seq("dst"), "left_semi")
         .select("src").distinct()
-      val affB = if (small) broadcast(affected) else affected
+      val affB = Tuning.broadcastIfFits(affected, n)
       val cj = c.select(col("id").as("dst"), col("c").as("cn"))
       // H-index via the sorted-rank identity: H(values) =
       // max_r min(value_r, r) with values ranked descending.
       val h = e.join(affB, Seq("src"), "left_semi")
-        .join(if (small) broadcast(cj) else cj, Seq("dst"))
+        .join(Tuning.broadcastIfFits(cj, n), Seq("dst"))
         .withColumn("rn", row_number().over(w).cast("long"))
         .select(col("src"), least(col("cn"), col("rn")).as("h"))
         .groupBy(col("src").as("id")).agg(max("h").as("h"))

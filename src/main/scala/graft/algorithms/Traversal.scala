@@ -23,36 +23,31 @@ object Traversal {
     // Edge count rides the checkpoint for the regime gate (the edge
     // view is joined every level anyway, so materializing it once is
     // also the right distributed plan).
-    val (e, mE) = Probe.checkpointObserved(
-      edges.select("src", "dst"), count(lit(1)).as("m"))
+    val (e, nE) = Probe.checkpointCounted(edges.select("src", "dst"))
     // Frontier emptiness rides each level's checkpoint job
     // (Dataset.observe) — one job per level, no separate isEmpty scan.
-    val (v0, m0) = Probe.checkpointObserved(
-      seeds.select(col("id")).distinct().withColumn("dist", lit(0L)),
-      count(lit(1)).as("n"))
-    // Dual regime, same gate pattern as the other iterative kernels:
-    // level-synchronous BFS over integer hop counts is bit-free of
-    // float concerns, so the packed driver BFS is exactly the
-    // distributed fixpoint without the per-level scheduler floor.
-    // Past the gate the frontier joins below are the 100 TB path.
-    if (mE("m").asInstanceOf[Long] <= Tuning.broadcastThreshold &&
-        m0("n").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    val (v0, n0) = Probe.checkpointCounted(
+      seeds.select(col("id")).distinct().withColumn("dist", lit(0L)))
+    // Dual regime: level-synchronous BFS over integer hop counts is
+    // bit-free of float concerns, so the packed driver BFS is exactly the
+    // distributed fixpoint without the per-level scheduler floor. Past the
+    // gate the frontier joins below are the 100 TB path.
+    if (Tuning.fits(nE, n0))
       return bfsLocal(e, v0.select("id"), maxDepth)
     var visited = v0
     var frontier = visited
-    var frontierCount = m0("n").asInstanceOf[Long]
+    var frontierCount = n0
     var depth = 0
     while (depth < maxDepth && frontierCount > 0) {
       depth += 1
-      val (f, mF) = Probe.checkpointObserved(
+      val (f, nF) = Probe.checkpointCounted(
         frontier.select("id")
           .join(e, col("id") === e("src"))
           .select(e("dst").as("id")).distinct()
           .join(visited, Seq("id"), "left_anti")
-          .withColumn("dist", lit(depth.toLong)),
-        count(lit(1)).as("n"))
+          .withColumn("dist", lit(depth.toLong)))
       frontier = f
-      frontierCount = mF("n").asInstanceOf[Long]
+      frontierCount = nF
       visited = visited.unionByName(frontier).localCheckpoint()
     }
     visited
@@ -129,9 +124,8 @@ object Traversal {
     // parent, cycling the path unwind — excluded here and in the
     // oracle's `we` CTE identically
     // Edge/heuristic counts ride their checkpoints for the regime gate.
-    val (e, mE) = Probe.checkpointObserved(
-      wedges.select("src", "dst", "weight").filter(col("src") =!= col("dst")),
-      count(lit(1)).as("n"))
+    val (e, nE) = Probe.checkpointCounted(
+      wedges.select("src", "dst", "weight").filter(col("src") =!= col("dst")))
     def emptyOut = ss.range(0).select(lit("").as("path"), lit(0.0).as("cost"))
     if (srcId == dstId)
       return ss.range(1).select(lit(srcId.toString).as("path"), lit(0.0).as("cost"))
@@ -143,19 +137,17 @@ object Traversal {
       case "zero"      => lit(0.0)
       case other => throw new IllegalArgumentException(s"unknown heuristic '$other'")
     }
-    val (h, mH) = Probe.checkpointObserved(
-      coords.crossJoin(broadcast(dstC)).select(col("id"), hCol.as("h")),
-      count(lit(1)).as("n"))
-    // Dual regime, same gate pattern as the other iterative kernels:
-    // each distributed relaxation round costs a scheduler floor and the
-    // round count is the pruned-frontier settling depth, so while edges
-    // AND the heuristic table fit the driver gate, run the identical
-    // relaxation loop (same candidate set, same (g, parent) merge, same
-    // prune-against-best, same stop signature) over packed collects.
-    // Past the gate the joins below are the 100 TB path; AlgorithmsSpec
-    // pins both regimes against Dijkstra on every heuristic.
-    if (mE("n").asInstanceOf[Long] <= Tuning.broadcastThreshold &&
-        mH("n").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    val (h, nH) = Probe.checkpointCounted(
+      coords.crossJoin(broadcast(dstC)).select(col("id"), hCol.as("h")))
+    // Dual regime: each distributed relaxation round costs a scheduler
+    // floor and the round count is the pruned-frontier settling depth, so
+    // while edges AND the heuristic table fit the driver gate, run the
+    // identical relaxation loop (same candidate set, same (g, parent)
+    // merge, same prune-against-best, same stop signature) over packed
+    // collects. Past the gate the joins below are the 100 TB path;
+    // AlgorithmsSpec pins both regimes against Dijkstra on every
+    // heuristic.
+    if (Tuning.fits(nE, nH))
       return aStarLocal(e, h, srcId, dstId, maxIterations)
     var g = ss.range(1)
       .select(lit(srcId).as("id"), lit(0.0).as("g"), lit(-1L).as("parent"))
@@ -300,17 +292,14 @@ object Traversal {
     * shortest-path hop diameter; deterministic because path sums are the
     * same IEEE additions in any engine and MIN is order-free. */
   def bellmanFord(wedges: DataFrame, seeds: DataFrame, iterations: Int): DataFrame = {
-    val (e, mE) = Probe.checkpointObserved(
-      wedges.select("src", "dst", "weight"), count(lit(1)).as("m"))
-    val (d0, m0) = Probe.checkpointObserved(
-      seeds.select(col("id")).distinct().withColumn("dist", lit(0.0)),
-      count(lit(1)).as("n"))
+    val (e, nE) = Probe.checkpointCounted(wedges.select("src", "dst", "weight"))
+    val (d0, n0) = Probe.checkpointCounted(
+      seeds.select(col("id")).distinct().withColumn("dist", lit(0.0)))
     // Dual regime: the per-round relaxation is the same IEEE additions
     // and an order-free MIN in either engine, so the packed driver loop
     // is bit-equal to the distributed rounds. Past the gate the join
     // loop below is the 100 TB path.
-    if (mE("m").asInstanceOf[Long] <= Tuning.broadcastThreshold &&
-        m0("n").asInstanceOf[Long] <= Tuning.broadcastThreshold)
+    if (Tuning.fits(nE, n0))
       return bellmanFordLocal(e, d0.select("id"), iterations)
     var dist = d0
     for (_ <- 1 to iterations) {

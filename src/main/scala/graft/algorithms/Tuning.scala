@@ -1,19 +1,26 @@
 package graft.algorithms
 
-/** Shared regime knobs for the iterative kernels.
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.broadcast
+
+/** The one regime gate of graft.
   *
-  * Every dual-regime kernel (connected components, SCC, PageRank,
-  * k-core, core numbers, triangle counts, Louvain, Brandes betweenness,
-  * BFS, Bellman-Ford, A*, all-shortest-paths, IVF) gates "replay the
-  * round semantics on the driver over a packed collect / broadcast the
-  * |V|-bounded side" vs "shuffle join" on the same row-count threshold.
-  * The default (4M rows ≈ tens of MB) is safely inside a driver/executor
-  * heap; a 100 TB run crosses it and takes the shuffle branch. The
-  * threshold is a system property so tests can force the shuffle regime
-  * on small data (`-Dgraft.broadcast.threshold=0`, or the
-  * `SPARK_GRAFT_BROADCAST_THRESHOLD` env bridge in Verify/Bench/
-  * ScaleProbe) — the code path a large cluster actually runs must be
-  * exercisable, oracle-checkable, and timeable without a large cluster.
+  * Every dual-regime kernel picks between two physical plans from sizes
+  * it observed on its own checkpoints ([[Probe.checkpointCounted]]):
+  * under the gate it replays the round semantics on the driver over a
+  * packed collect, or broadcasts the |V|-bounded side of a join; past
+  * the gate it runs the shuffle-join plan a 100 TB run takes. Kernels
+  * ask [[fits]] (or [[fitsProduct]] for a pair state, or
+  * [[broadcastIfFits]] for a join side) and never read the threshold
+  * themselves, so this object is the only place the decision is made.
+  *
+  * The threshold is a row count. The default (4M rows ≈ tens of MB) is
+  * safely inside a driver/executor heap. It is a JVM-global system
+  * property so tests and tools can force the shuffle regime on small
+  * data (`-Dgraft.broadcast.threshold=0`, [[withBroadcastThreshold]], or
+  * the `SPARK_GRAFT_BROADCAST_THRESHOLD` env bridge in
+  * [[graft.ToolSession]]) — the code path a large cluster actually runs
+  * must be exercisable, oracle-checkable, and timeable without one.
   */
 object Tuning {
   // Log-noise note: the value-domain window kernels (deciles, pooled
@@ -31,20 +38,23 @@ object Tuning {
     sys.props.get("graft.broadcast.threshold").map(_.toLong)
       .getOrElse(DefaultBroadcastThreshold)
 
-  /** Gate for the fused sorted-adjacency intersect plan in
-    * [[graft.algorithms.Structure.edgeSupport]]: the plan's exact
-    * comparison count is Σ deg², measured in the same job that builds
-    * the degree frame; at or below this many comparisons the fused
-    * plan (fewest stages) wins, above it the degree-ordered O(m^1.5)
-    * triangle closure takes over. 2e9 long-compares ≈ a few seconds
-    * across one executor's cores — per-partition work stays bounded
-    * either way. Overridable like the broadcast gate so specs can pin
-    * plan-parity on small graphs. */
-  val DefaultIntersectCostThreshold = 2000000000L
+  /** True when every observed size is within the gate: the driver
+    * regime (or a broadcast) is safe for all of them. */
+  def fits(sizes: Long*): Boolean = {
+    val t = broadcastThreshold
+    sizes.forall(_ <= t)
+  }
 
-  def intersectCostThreshold: Long =
-    sys.props.get("graft.intersect.cost.threshold").map(_.toLong)
-      .getOrElse(DefaultIntersectCostThreshold)
+  /** [[fits]] for a size that is the product of two counts (an n² pair
+    * state, probes × candidates). A product that overflows a Long does
+    * not fit. */
+  def fitsProduct(a: Long, b: Long): Boolean =
+    try fits(Math.multiplyExact(a, b))
+    catch { case _: ArithmeticException => false }
+
+  /** `df` with a broadcast hint when its observed `rows` fit the gate. */
+  def broadcastIfFits(df: DataFrame, rows: Long): DataFrame =
+    if (fits(rows)) broadcast(df) else df
 
   /** Run `body` with the broadcast gate forced to `n` rows (test/probe
     * helper; restores the previous setting on exit). */

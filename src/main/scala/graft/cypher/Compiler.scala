@@ -259,10 +259,9 @@ final class Compiler(graph: PropertyGraph,
         if (maxHops.isEmpty) {
           // unbounded: materialize the level, drain probe riding the
           // checkpoint job (Dataset.observe)
-          val (f, mF) = graft.algorithms.Probe.checkpointObserved(
-            frontier, count(lit(1)).as("n"))
+          val (f, nF) = graft.algorithms.Probe.checkpointCounted(frontier)
           frontier = f
-          drained = mF("n").asInstanceOf[Long] == 0L
+          drained = nF == 0L
         }
       } else drained = true
       depth += 1
@@ -288,12 +287,11 @@ final class Compiler(graph: PropertyGraph,
     val step = hop.select(col("_hsrc").as("_hmid"), col("_hdst").as("_hnext"))
     val identity =
       graph.nodes.select(col("id").as("_hsrc"), col("id").as("_hdst"))
-    val (v0, m0) = graft.algorithms.Probe.checkpointObserved(
-      hop.select(col("_hsrc"), col("_hdst")).distinct(),
-      count(lit(1)).as("n"))
+    val (v0, n0) = graft.algorithms.Probe.checkpointCounted(
+      hop.select(col("_hsrc"), col("_hdst")).distinct())
     var visited = v0
     var frontier = visited
-    var frontierCount = m0("n").asInstanceOf[Long]
+    var frontierCount = n0
     var acc: Option[DataFrame] = if (minHops == 0) Some(identity) else None
     // depth-1 pairs only when the range actually admits 1 hop (*0..0 is
     // identity only)
@@ -303,15 +301,14 @@ final class Compiler(graph: PropertyGraph,
     while (maxHops.forall(depth < _) && frontierCount > 0) {
       depth += 1
       // drain probe rides the checkpoint job (Dataset.observe)
-      val (f, mF) = graft.algorithms.Probe.checkpointObserved(
+      val (f, nF) = graft.algorithms.Probe.checkpointCounted(
         frontier
           .join(step, col("_hdst") === col("_hmid"))
           .select(col("_hsrc"), col("_hnext").as("_hdst"))
           .distinct()
-          .join(visited, Seq("_hsrc", "_hdst"), "left_anti"),
-        count(lit(1)).as("n"))
+          .join(visited, Seq("_hsrc", "_hdst"), "left_anti"))
       frontier = f
-      frontierCount = mF("n").asInstanceOf[Long]
+      frontierCount = nF
       visited = visited.unionByName(frontier).localCheckpoint()
       if (depth >= minHops)
         acc = Some(acc.fold(frontier)(_ unionByName frontier))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Dual-regime global ranking primitives. A global NTILE is the
   * textbook single-task trap: `ntile(n).over(Window.orderBy(...))`
   * funnels the WHOLE frame through one window partition. Under
-  * [[graft.algorithms.Tuning.broadcastThreshold]] that is the right
+  * the [[graft.algorithms.Tuning]] gate that is the right
   * plan (one sort of a driver-sized frame, and the shape a SQL oracle
   * can mirror); past the gate the same assignment is computed with NO
   * single-partition window: range-repartition on the (unique) sort
@@ -30,10 +30,8 @@ object Ranks {
   def globalNtile(df: DataFrame, nTiles: Int, order: Seq[Column],
                   out: String): DataFrame = {
     require(nTiles >= 2, s"globalNtile needs nTiles >= 2, got $nTiles")
-    val (ck, m) = graft.algorithms.Probe.checkpointObserved(
-      df, count(lit(1)).as("n"))
-    val n = m("n").asInstanceOf[Long]
-    if (n <= graft.algorithms.Tuning.broadcastThreshold)
+    val (ck, n) = graft.algorithms.Probe.checkpointCounted(df)
+    if (graft.algorithms.Tuning.fits(n))
       ck.withColumn(out,
         ntile(nTiles).over(Window.orderBy(order: _*)).cast("long"))
     else {

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * items below `minItemCount` are pruned (A-priori: an infrequent item
   * cannot appear in a frequent pair), which shrinks both sides of the
   * self-join at the source. The item-count side is broadcast only
-  * under the shared [[graft.algorithms.Tuning.broadcastThreshold]]
+  * under the shared [[graft.algorithms.Tuning]]
   * gate — at web scale it shuffle-joins on part key like any dim join.
   * The final top-k is a single ORDER BY ... LIMIT with a unique
   * (p1, p2) tiebreak so pagination is deterministic cross-engine.
@@ -27,20 +27,16 @@ object Association {
     * total basket count (the support denominator). */
   def basketPairs(lineitem: DataFrame, minItemCount: Long = 2L,
                   minPairCount: Long = 2L, topK: Int = 100): DataFrame = {
-    val (baskets, mB) = graft.algorithms.Probe.checkpointObserved(
+    val (baskets, nB) = graft.algorithms.Probe.checkpointCounted(
       lineitem.select(col("l_orderkey").as("okey"), col("l_partkey").as("pkey"))
-        .distinct(),
-      count(lit(1)).as("rows"))
+        .distinct())
     // Support denominator: one scalar aggregate over the checkpointed
     // basket frame (observe() can't carry DISTINCT metrics).
     val nOrders = baskets.select("okey").distinct().count()
     val itemCnt = baskets.groupBy("pkey")
       .agg(count(lit(1)).as("icnt"))
       .filter(col("icnt") >= minItemCount)
-    val cntSide =
-      if (mB("rows").asInstanceOf[Long] <= graft.algorithms.Tuning.broadcastThreshold)
-        broadcast(itemCnt)
-      else itemCnt
+    val cntSide = graft.algorithms.Tuning.broadcastIfFits(itemCnt, nB)
     // A-priori prune: keep only frequent items, then pair within order.
     val freq = baskets.join(cntSide, Seq("pkey"))
       .select(col("okey"), col("pkey"), col("icnt"))

@@ -655,7 +655,7 @@ object Corpus {
     *
     * Scale: the scoring is [[lmScore]]'s bounded plan. The tier split
     * is dual-regime like the iterative kernels: under
-    * [[graft.algorithms.Tuning.broadcastThreshold]] the exact NTILE
+    * the [[graft.algorithms.Tuning]] gate the exact NTILE
     * runs as one total-order window (fine for a gate-small scored
     * frame, and the regime the DuckDB oracle can mirror); past the
     * gate the SAME assignment is computed without any single-partition

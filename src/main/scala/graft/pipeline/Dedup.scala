@@ -230,16 +230,14 @@ object Dedup {
     // sort-merge-joined them — shuffling the multi-million-row pair
     // stream twice to meet a Σ|shingles|-long frame that is MBs at
     // bench scale. Gate on the observed total shingle count (the
-    // broadcast's true size driver): under Tuning.broadcastThreshold
-    // the two joins become broadcast hash joins and the pair stream
-    // never shuffles; past it (cluster-scale corpus) the shuffle
-    // join stands unchanged.
+    // broadcast's true size driver): under the gate the two joins
+    // become broadcast hash joins and the pair stream never shuffles;
+    // past it (cluster-scale corpus) the shuffle join stands unchanged.
     val (shArr, mSh) = graft.algorithms.Probe.checkpointObserved(
       shArrIn.getOrElse(shingleArrays(docs, hashedIn)),
       sum(size(col("shs"))).as("n"))
-    val small = mSh("n") == null ||
-      mSh("n").asInstanceOf[Long] <= graft.algorithms.Tuning.broadcastThreshold
-    def side(f: DataFrame) = if (small) broadcast(f) else f
+    val shingles = Option(mSh("n")).fold(0L)(_.asInstanceOf[Long])
+    def side(f: DataFrame) = graft.algorithms.Tuning.broadcastIfFits(f, shingles)
     pairs
       .join(side(shArr.select(col("doc_id").as("a"), col("shs").as("sa"))), Seq("a"))
       .join(side(shArr.select(col("doc_id").as("b"), col("shs").as("sb"))), Seq("b"))
@@ -468,20 +466,16 @@ object Dedup {
     require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen,
       "setSimJoin needs 0 < tauNum/tauDen <= 1")
     val w = org.apache.spark.sql.expressions.Window
-    val (tk, mTk) = graft.algorithms.Probe.checkpointObserved(
+    val (tk, nTk) = graft.algorithms.Probe.checkpointCounted(
       docs.select(col("doc_id"),
           explode(split(col("text"), " ")).as("term"))
-        .filter(col("term") =!= "").distinct(),
-      count(lit(1)).as("n"))
+        .filter(col("term") =!= "").distinct())
     val dfT = tk.groupBy("term").agg(count(lit(1)).as("df"))
     // Vocab frame ≤ |tk| rows: broadcast only when the (doc, term) set
     // itself is gate-small — a web-scale vocabulary must shuffle-join,
     // not be shipped to every executor (same discipline as
     // LinkPrediction's degree side).
-    val dfSide =
-      if (mTk("n").asInstanceOf[Long] <= graft.algorithms.Tuning.broadcastThreshold)
-        broadcast(dfT)
-      else dfT
+    val dfSide = graft.algorithms.Tuning.broadcastIfFits(dfT, nTk)
     val ranked = tk.join(dfSide, Seq("term"))
       .withColumn("rn", row_number().over(
         w.partitionBy("doc_id").orderBy(col("df").asc, col("term").asc)))

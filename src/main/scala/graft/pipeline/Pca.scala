@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * to a d×d frame (d² shuffle rows TOTAL at any corpus size; the n·d²
   * multiply work is the irreducible covariance cost and it scales out
   * perfectly). Power iteration then runs on the d×d frame: under
-  * [[graft.algorithms.Tuning.broadcastThreshold]] it folds on the
+  * the [[graft.algorithms.Tuning]] gate it folds on the
   * driver (a d²-double array — microseconds); past the gate each step
   * is one broadcast-size join + map-side sum, the same dual-regime
   * contract as the graph kernels. The start vector is uniform 1/√d,
@@ -50,10 +50,8 @@ object Pca {
   /** Dual-regime power iteration on a (not yet checkpointed) d×d
     * matrix frame. */
   private def powerTop(cov: DataFrame, iters: Int): DataFrame = {
-    val (covCk, mC) = graft.algorithms.Probe.checkpointObserved(
-      cov, count(lit(1)).as("cells"))
-    val cells = mC("cells").asInstanceOf[Long]
-    if (cells <= graft.algorithms.Tuning.broadcastThreshold)
+    val (covCk, cells) = graft.algorithms.Probe.checkpointCounted(cov)
+    if (graft.algorithms.Tuning.fits(cells))
       pcaLocal(covCk, iters)
     else pcaDistributed(covCk, iters)
   }
@@ -77,10 +75,8 @@ object Pca {
     * iteration cost is identical to [[pcaTop]]'s. */
   def pcaSecond(emb: DataFrame, iters: Int = 15): DataFrame = {
     require(iters >= 1, "pcaSecond needs iters >= 1")
-    val (covCk, mC) = graft.algorithms.Probe.checkpointObserved(
-      covariance(emb), count(lit(1)).as("cells"))
-    val cells = mC("cells").asInstanceOf[Long]
-    val local = cells <= graft.algorithms.Tuning.broadcastThreshold
+    val (covCk, cells) = graft.algorithms.Probe.checkpointCounted(covariance(emb))
+    val local = graft.algorithms.Tuning.fits(cells)
     val first =
       (if (local) pcaLocal(covCk, iters) else pcaDistributed(covCk, iters))
         .select(col("pos"), col("loading"), col("eigval"))

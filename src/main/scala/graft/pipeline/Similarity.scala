@@ -205,22 +205,21 @@ object Similarity {
   def annIvf(emb: DataFrame, k: Int = 16, lloyd: Int = 2, nprobe: Int = 2,
              probeMax: Long = 10L, topK: Int = 3): DataFrame = {
     require(nprobe >= 1 && nprobe <= k, "bad nprobe")
-    // Dual regime, same gate pattern as the graph kernels, keyed on the
-    // total CELL count (vectors × dims — the collect payload): the
-    // whole pipeline is a dozen scheduler-floor jobs over tiny frames
-    // (lloyd rounds, shortlist window, candidate joins), so a packed
-    // driver replay wins by the job-count floor while the data fits.
-    // Float sums run in a different order than the distributed partial
-    // aggregates, which the 6-dp cosine rounding absorbs (same accepted
-    // divergence as every float aggregate; q_ann_ivf is rows-only by
-    // design and the nprobe=k ≡ cosineTopK exactness invariant is
-    // arithmetic-independent). Past the gate the set-oriented plan
-    // below is the 100 TB path.
+    // Dual regime, keyed on the total CELL count (vectors × dims — the
+    // collect payload): the whole pipeline is a dozen scheduler-floor jobs
+    // over tiny frames (lloyd rounds, shortlist window, candidate joins),
+    // so a packed driver replay wins by the job-count floor while the data
+    // fits. Float sums run in a different order than the distributed
+    // partial aggregates, which the 6-dp cosine rounding absorbs (same
+    // accepted divergence as every float aggregate; q_ann_ivf is rows-only
+    // by design and the nprobe=k ≡ cosineTopK exactness invariant is
+    // arithmetic-independent). Past the gate the set-oriented plan below
+    // is the 100 TB path.
     val (embCk, mEmb) = graft.algorithms.Probe.checkpointObserved(
       emb.select(col("vec_id"), col("embedding")),
       sum(size(col("embedding"))).as("cells"))
     val cells = Option(mEmb("cells")).fold(0L)(_.asInstanceOf[Long])
-    if (cells <= graft.algorithms.Tuning.broadcastThreshold)
+    if (graft.algorithms.Tuning.fits(cells))
       return annIvfLocal(embCk, k, lloyd, nprobe, probeMax, topK)
     val e = exploded(embCk)
     val n = norms(embCk)
@@ -916,11 +915,10 @@ object Similarity {
     // The greedy rounds run over ≤ probes·candK candidate rows and
     // ≤ probes·candK² sims — integer-exact frames a driver loop folds
     // in microseconds, where the distributed loop pays selectK
-    // scheduler rounds. Same dual-regime gate as the graph kernels;
-    // the integer arithmetic makes the two branches bit-equal. The
+    // scheduler rounds. The integer arithmetic makes the two branches bit-equal. The
     // distributed loop below is the path for probe sets too large to
     // collect (e.g. re-ranking every query of a serving log).
-    if (probeMax * candK <= graft.algorithms.Tuning.broadcastThreshold)
+    if (graft.algorithms.Tuning.fitsProduct(probeMax, candK))
       return mmrLocal(cand, simSym, selectK, lamT)
     val byProbe = Window.partitionBy("qid")
     // scoreI is the MMR score in exact 10⁻⁷ units: λT·ri − (10−λT)·si

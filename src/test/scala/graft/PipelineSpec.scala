@@ -435,7 +435,8 @@ class PipelineSpec extends SparkSpec {
     import implicits._
     val k4 = (for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b)).toDF("a", "b")
     val viaBroadcast = graft.algorithms.Structure.triangles(k4).count()
-    val viaShuffle = graft.algorithms.Structure.triangles(k4, broadcastCloseMaxEdges = 0L).count()
+    val viaShuffle = graft.algorithms.Tuning.withBroadcastThreshold(0L)(
+      graft.algorithms.Structure.triangles(k4).count())
     assert(viaBroadcast == 4L && viaShuffle == 4L)
   }
 

@@ -465,4 +465,19 @@ class PlanSpec extends SparkSpec {
       plan.take(1500))
     assert(!plan.contains("CartesianProduct"))
   }
+
+  test("source audit: only Tuning.scala reads the broadcast threshold") {
+    // Every regime decision goes through Tuning.fits / fitsProduct /
+    // broadcastIfFits; a kernel comparing against the raw threshold is
+    // a gate the one-module contract no longer sees.
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    assert(files.size > 20, s"source tree not found from ${new java.io.File(".").getAbsolutePath}")
+    def code(p: java.nio.file.Path): String = java.nio.file.Files.readString(p)
+      .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    val readers = files.filter(p => code(p).contains("broadcastThreshold"))
+      .map(_.getFileName.toString)
+    assert(readers == List("Tuning.scala"), readers)
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.algorithms.Probe
+import graft.algorithms.{Probe, Tuning}
 
 class ProbeSpec extends SparkSpec {
 
@@ -16,6 +16,9 @@ class ProbeSpec extends SparkSpec {
     assert(m("s").asInstanceOf[java.math.BigDecimal].longValueExact() === 60L)
     // the checkpointed frame is live and re-usable downstream
     assert(out.agg(sum("id")).head.getLong(0) === 6L)
+    val (counted, n) = Probe.checkpointCounted(df)
+    assert(n === 3L)
+    assert(counted.agg(sum("id")).head.getLong(0) === 6L)
   }
 
   test("checkpointObserved on an empty frame: count 0, sum null") {
@@ -27,6 +30,23 @@ class ProbeSpec extends SparkSpec {
     assert(out.count() === 0L)
     assert(m("n") === 0L)
     assert(m("s") === null)
+    val (counted, n) = Probe.checkpointCounted(df)
+    assert(n === 0L)
+    assert(counted.count() === 0L)
+  }
+
+  test("Tuning.fitsProduct: an n² pair state that overflows a Long does not fit") {
+    val n = 3037000500L // n * n wraps negative in Long arithmetic
+    assert(n * n < 0L)
+    assert(!Tuning.fitsProduct(n, n))
+    Tuning.withBroadcastThreshold(Long.MaxValue) {
+      assert(!Tuning.fitsProduct(n, n))
+      assert(Tuning.fitsProduct(3037000499L, 3037000499L))
+    }
+    Tuning.withBroadcastThreshold(625L) {
+      assert(Tuning.fitsProduct(25L, 25L) && !Tuning.fitsProduct(25L, 26L))
+      assert(Tuning.fits(625L, 0L) && !Tuning.fits(625L, 626L))
+    }
   }
 
   test("Bench.hostSuspect: the CPU-steal signature and nothing else") {
