@@ -42,7 +42,8 @@ object Oracles {
   }
 
   /** Unrolled reference PageRank (dangling mass dropped, final
-    * normalization), mirroring Community.pageRank op for op. */
+    * normalization), mirroring Community.pageRank op for op (its unit
+    * weights make rank·1.0/Σ1 bitwise rank / odeg). */
   def pageRankSql(damping: Double, iters: Int): String = {
     val d = damping.toString
     val sb = new StringBuilder(P)
@@ -456,7 +457,8 @@ FROM tn LEFT JOIN agg a ON a.id = tn.id"""
   /** Unrolled weighted PageRank on the full directed weighted trade
     * graph, mirroring Community.weightedPageRank iteration for
     * iteration (rank·w/W(u) contributions, dangling identity rows,
-    * final sum-normalization, 8 dp). */
+    * final sum-normalization; 8 dp as the q_weighted_pagerank entry
+    * rounds). */
   def weightedPageRankSql(damping: Double, iters: Int): String = {
     val d = damping.toString
     val sb = new StringBuilder(s"WITH ${DerivedGraphs.tradeSql}")
@@ -1034,7 +1036,7 @@ FROM tn LEFT JOIN h$iters h ON h.id = tn.id LEFT JOIN a$iters a ON a.id = tn.id"
   /** Unrolled personalized PageRank on the trade-top graph, mirroring
     * Community.personalizedPageRank op for op — including the
     * teleport-folded identity rows (c = tele/d, one aggregation
-    * d·Σc per iteration). */
+    * d·Σc per iteration; the kernel's 0.0 base adds nothing). */
   def pprSql(sources: Seq[Long], damping: Double, iters: Int): String = {
     val d = damping.toString
     val srcList = sources.mkString(", ")

@@ -554,7 +554,8 @@ object SparkEntry {
       algorithms.Structure.reciprocity(DerivedGraphs.nationTrade(s, d))),
     "q_weighted_pagerank" -> ((s, d) =>
       Community.weightedPageRank(DerivedGraphs.tradeNodes(s, d),
-        DerivedGraphs.nationTradeAll(s, d), 0.85, 10)),
+          DerivedGraphs.nationTradeAll(s, d), 0.85, 10)
+        .select(col("id"), round(col("rank"), 8).as("rank"))),
     "q_rich_club" -> ((s, d) =>
       algorithms.Structure.richClub(DerivedGraphs.partCooccur(s, d))),
     "q_edge_jaccard" -> ((s, d) => edgeJaccardCached(s, d)),

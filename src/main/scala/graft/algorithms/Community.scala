@@ -1,6 +1,6 @@
 package graft.algorithms
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Community / partition algorithms (reference: src/algorithms/community.rs,
@@ -636,64 +636,150 @@ object Community {
   /** PageRank mirroring the reference exactly (pagerank.rs:9):
     * rank' = (1-d)/n + d·Σ_in rank/outdeg over the edge multiset
     * (multi-edges contribute once per edge), dangling mass dropped,
-    * final sum-normalization. Rank stays id-partitioned across
-    * iterations; contributions are partially aggregated map-side. */
+    * final sum-normalization. [[rankFixpoint]] with every edge at
+    * weight 1 and the uniform teleport. Output: unrounded (id, rank). */
   def pageRank(nodes: DataFrame, edges: DataFrame, damping: Double,
-               iterations: Int): DataFrame = {
+               iterations: Int): DataFrame =
+    rankFixpoint(nodes, edges.select("src", "dst"), None, None, damping,
+      iterations)
+
+  /** WEIGHTED PageRank — transition probability proportional to edge
+    * weight (rank flows as rank(u)·w(u,v)/W(u), W(u) the out-weight
+    * sum), the ranking a weighted interaction graph actually wants:
+    * a 1000-lineitem trade lane should pull more rank than a 1-item
+    * one. [[rankFixpoint]] over the `cnt` column with the uniform
+    * teleport; a weight ≤ 0 is rejected. Output: unrounded (id, rank). */
+  def weightedPageRank(nodes: DataFrame, wedges: DataFrame,
+                       damping: Double, iterations: Int): DataFrame =
+    rankFixpoint(nodes, wedges.select("src", "dst", "cnt"),
+      Some(col("cnt").cast("double")), None, damping, iterations)
+
+  /** Personalized PageRank (random walk with restart): the teleport
+    * mass lands only on the `sources` set instead of uniformly —
+    * rank' = (1−d)·1_{v∈S}/|S| + d·Σ_in rank/outdeg, started from the
+    * uniform distribution over S, final sum-normalization. The
+    * proximity ranking behind "related nodes" / seeded recommendation
+    * queries (Jeh & Widom 2003 / Page et al.'s personalization
+    * vector). [[rankFixpoint]] with every edge at weight 1 and the
+    * restart-set teleport; at least one source must be in the node
+    * set. Output: unrounded (id, rank). */
+  def personalizedPageRank(nodes: DataFrame, edges: DataFrame,
+                           sources: Seq[Long], damping: Double,
+                           iterations: Int): DataFrame = {
+    require(sources.nonEmpty, "personalized PageRank needs >= 1 source")
+    rankFixpoint(nodes, edges.select("src", "dst"), None, Some(sources),
+      damping, iterations)
+  }
+
+  private val NoSourceInNodes = "personalized PageRank: no source is in the node set"
+  private val NonPositiveWeight = "PageRank: every edge weight must be > 0"
+
+  /** The PageRank family's one fixpoint, over the edge multiset
+    * `edges` with per-edge weight w = `weight` (a Column over `edges`;
+    * None: every edge weighs 1.0, and the driver twin collects no
+    * weight column) and the loop-invariant out-weight W(u) = Σ_v w(u,v):
+    *
+    * rank'(v) = base + tele(v) + d·Σ_{u→v} rank(u)·w(u,v)/W(u)
+    *
+    * dangling mass dropped, then one final sum-normalization.
+    * `sources` picks the teleport and the start:
+    *  - None: base = (1−d)/n (n = node rows), tele = 0, start 1/n on
+    *    every id;
+    *  - Some(S): base = 0, tele = (1−d)/|S| on the ids in S, start
+    *    1/|S| on the ids in S.
+    * IllegalArgumentException when no id of S is in the node set or a
+    * weight is ≤ 0 (a zero out-weight divides by zero). With unit
+    * weights rank·1.0/Σ1 is bitwise rank/outdeg, and adding the 0.0
+    * tele (PageRank) or the 0.0 base (PPR) changes no bit, so each
+    * wrapper keeps the operation order its `Oracles.*Sql` mirror
+    * replays.
+    *
+    * Regime gate: the node set is counted first and the edges only
+    * once it fits; when both fit ([[Tuning.fits]]) the packed driver
+    * twin [[rankFixpointLocal]] runs — ten scheduler-floor iterations
+    * on a driver-sized graph lose to one packed collect by ~7×
+    * (measured 7.1 s → ~1 s at sf0.1). Past the gate the loop below is
+    * the 100 TB path. Identical per-iteration arithmetic; float-sum
+    * ORDER differs (so do Spark's own nondeterministic partial
+    * aggregations), which the 8-dp oracle rounding and
+    * ShuffleRegimeSpec's 1e-9 comparison absorb.
+    *
+    * Presence rule: every id carries an identity row each iteration,
+    * so it always has a rank; an id outside the node set has a rank
+    * only in an iteration that a contribution reaches it (it gets
+    * `base` but never `tele`), and passes it on in the next one.
+    *
+    * Cadence: the rank lineage is cut every 3rd iteration, and the
+    * last iteration's checkpoint observes the normalization sum, so it
+    * materializes and totals in one job. */
+  private def rankFixpoint(nodes: DataFrame, edges: DataFrame,
+                           weight: Option[Column], sources: Option[Seq[Long]],
+                           damping: Double, iterations: Int): DataFrame = {
     // Checkpoint the id set once: it is unioned into every iteration and
     // the parquet scan + projection would otherwise re-run per iteration.
     // The node count rides the checkpoint job (Dataset.observe).
     val (ids, nI) = Probe.checkpointCounted(nodes.select("id"))
     val n = nI.toDouble
-    // Dual regime: ten scheduler-floor iterations on a driver-sized graph
-    // lose to one packed collect by ~7× (measured 7.1 s → ~1 s at sf0.1).
-    // Identical per-iteration arithmetic; float-sum ORDER differs (so do
-    // Spark's own nondeterministic partial aggregations), which both the
-    // 8-dp oracle rounding and ShuffleRegimeSpec's 1e-9 comparison absorb.
-    // Past the gate the iterative plan below is the 100 TB path.
     if (Tuning.fits(nI)) {
-      val (eAll, nEAll) = Probe.checkpointCounted(edges.select("src", "dst"))
-      if (Tuning.fits(nEAll))
-        return pageRankLocal(ids, eAll, n, damping, iterations)
+      val (eAll, nE) = Probe.checkpointCounted(edges)
+      if (Tuning.fits(nE))
+        return rankFixpointLocal(ids, eAll, weight, sources, n, damping,
+          iterations)
     }
-    val e = edges.select("src", "dst")
-    val outdeg0 = e.groupBy(col("src").as("src")).agg(count(lit(1)).as("odeg"))
-    // out-degree is loop-invariant: attach it to the edge table once, so
-    // each iteration is one hash join + one map-side-combined aggregation.
-    // The degree table is |V|-bounded — broadcast it while driver-sized
-    // so building eDeg streams the edge list instead of shuffling it.
-    // While the rank table is driver-sized it broadcasts into the
-    // per-iteration join, so the edge table streams in place and
-    // pre-partitioning it would only add a full-edge shuffle (measured
-    // +4 s at sf0.1). Past the broadcast threshold the join becomes a
-    // shuffle join every iteration — THEN hash-partition the
+    val e = edges.select(col("src"), col("dst"),
+      weight.getOrElse(lit(1.0)).as("w"))
+    // The out-weight is loop-invariant: attach it to the edge table once,
+    // so each iteration is one hash join + one map-side-combined
+    // aggregation. The W table is |V|-bounded — broadcast it while
+    // driver-sized so building eW streams the edge list instead of
+    // shuffling it. While the rank table is driver-sized it broadcasts
+    // into the per-iteration join, so the edge table streams in place
+    // and pre-partitioning it would only add a full-edge shuffle
+    // (measured +4 s at sf0.1). Past the broadcast threshold the join
+    // becomes a shuffle join every iteration — THEN hash-partition the
     // checkpointed frame by src once (localCheckpoint preserves
     // outputPartitioning, rank is hash-partitioned by its groupBy), so
     // each iteration shuffles only the contribution groupBy, never the
-    // edges.
-    val small = Tuning.fits(nI)
-    val outdeg = if (small) broadcast(outdeg0) else outdeg0
-    val eDeg0 = e.join(outdeg, Seq("src"))
-    val eDeg = (if (small) eDeg0 else eDeg0.repartition(col("src")))
-      .localCheckpoint()
-    var rank = ids.withColumn("rank", lit(1.0 / n)).localCheckpoint()
+    // edges. The weight check rides the same checkpoint job.
+    val eW0 = e.join(Tuning.broadcastIfFits(
+      e.groupBy(col("src").as("src")).agg(sum(col("w")).as("wsum")), nI),
+      Seq("src"))
+    val (eW, mW) = Probe.checkpointObserved(
+      if (Tuning.fits(nI)) eW0 else eW0.repartition(col("src")),
+      min(col("w")).as("w_min"))
+    require(mW("w_min") == null || mW("w_min").asInstanceOf[Double] > 0,
+      NonPositiveWeight)
+    // teleport: a constant base on every group, or per-id identity rows
+    // c = tele/d so the single aggregation d·Σc reproduces
+    // tele + d·(contribution sum)
+    val (base, identity, start, r0) = sources match {
+      case None =>
+        ((1.0 - damping) / n, ids.withColumn("c", lit(0.0)), ids, 1.0 / n)
+      case Some(srcs) =>
+        val s = srcs.size.toDouble
+        val isSrc = col("id").isin(srcs: _*)
+        (0.0, ids.select(col("id"), (when(isSrc, lit((1.0 - damping) / s))
+            .otherwise(lit(0.0)) / lit(damping)).as("c")).localCheckpoint(),
+          ids.filter(isSrc), 1.0 / s)
+    }
+    val (rank0, nStart) = Probe.checkpointCounted(start.withColumn("rank", lit(r0)))
+    require(sources.isEmpty || nStart > 0, NoSourceInNodes)
+    var rank = rank0
     var totalObs = Double.NaN
     for (i <- 1 to iterations) {
-      // qualified aliases, not captured Columns: `rank` carries `eDeg` in
+      // qualified aliases, not captured Columns: `rank` carries `eW` in
       // its lineage after the first un-checkpointed iteration, and
       // attribute references into it would be ambiguous
-      val contribs = rank.as("r").join(eDeg.as("edg"), col("r.id") === col("edg.src"))
-        .select(col("edg.dst").as("id"), (col("r.rank") / col("edg.odeg")).as("c"))
-      // Dangling/unreached nodes ride along as 0-contribution identity
-      // rows, so the new rank is ONE map-side-combined aggregation —
-      // not a groupBy followed by a left-outer join back onto the ids.
-      rank = contribs.unionByName(ids.withColumn("c", lit(0.0)))
-        .groupBy("id").agg(
-          (lit((1.0 - damping) / n) + lit(damping) * sum("c")).as("rank"))
+      val contribs = rank.as("r").join(eW.as("edg"), col("r.id") === col("edg.src"))
+        .select(col("edg.dst").as("id"),
+          (col("r.rank") * col("edg.w") / col("edg.wsum")).as("c"))
+      // Dangling/unreached ids ride along as identity rows, so the new
+      // rank is ONE map-side-combined aggregation — not a groupBy
+      // followed by a left-outer join back onto the ids.
+      rank = contribs.unionByName(identity).groupBy("id").agg(
+        (lit(base) + lit(damping) * sum("c")).as("rank"))
       // lineage cut every few rounds is enough — a 3-iteration plan is
       // still flat, and skipping the eager materialization saves 2 jobs.
-      // The final cut also carries the normalization sum (observe), so
-      // the last iteration materializes and totals in one job.
       if (i == iterations) {
         val (ck, mT) = Probe.checkpointObserved(rank, sum("rank").as("t"))
         rank = ck
@@ -709,85 +795,49 @@ object Community {
     rank.select(col("id"), (col("rank") / lit(total)).as("rank"))
   }
 
-  /** WEIGHTED PageRank — transition probability proportional to edge
-    * weight (rank flows as rank(u)·w(u,v)/W(u), W(u) the out-weight
-    * sum), the ranking a weighted interaction graph actually wants:
-    * a 1000-lineitem trade lane should pull more rank than a 1-item
-    * one. Same plan shape as [[pageRank]]: weights and their
-    * loop-invariant normalizer attach to the edge table ONCE, each
-    * iteration is one hash join + one map-side-combined aggregation
-    * with dangling nodes riding as identity rows, lineage cut on the
-    * measured cadence, final sum-normalization riding the last
-    * checkpoint's observe. Dual regime like [[pageRank]]: the packed
-    * driver replay (weighted contributions, same union-aggregate
-    * presence semantics) under the gate — a 10-iteration fixpoint on
-    * a 625-edge graph is pure scheduler floor distributed. */
-  def weightedPageRank(nodes: DataFrame, wedges: DataFrame,
-                       damping: Double, iterations: Int): DataFrame = {
-    val (ids, nI) = Probe.checkpointCounted(nodes.select("id"))
-    val n = nI.toDouble
-    val (e, nE) = Probe.checkpointCounted(
-      wedges.select(col("src"), col("dst"),
-        col("cnt").cast("double").as("w")))
-    if (Tuning.fits(nI, nE))
-      return weightedPageRankLocal(ids, e, n, damping, iterations)
-    val wsum0 = e.groupBy(col("src").as("src")).agg(sum(col("w")).as("wsum"))
-    val small = Tuning.fits(nI)
-    val wsum = if (small) broadcast(wsum0) else wsum0
-    val eW0 = e.join(wsum, Seq("src"))
-    val eW = (if (small) eW0 else eW0.repartition(col("src")))
-      .localCheckpoint()
-    var rank = ids.withColumn("rank", lit(1.0 / n)).localCheckpoint()
-    var totalObs = Double.NaN
-    for (i <- 1 to iterations) {
-      val contribs = rank.as("r")
-        .join(eW.as("edg"), col("r.id") === col("edg.src"))
-        .select(col("edg.dst").as("id"),
-          (col("r.rank") * col("edg.w") / col("edg.wsum")).as("c"))
-      rank = contribs.unionByName(ids.withColumn("c", lit(0.0)))
-        .groupBy("id").agg(
-          (lit((1.0 - damping) / n) + lit(damping) * sum("c")).as("rank"))
-      if (i == iterations) {
-        val (ck, mT) = Probe.checkpointObserved(rank, sum("rank").as("t"))
-        rank = ck
-        totalObs = mT("t").asInstanceOf[Double]
-      } else if (i % 3 == 0) rank = rank.localCheckpoint()
-    }
-    val total =
-      if (iterations >= 1) totalObs
-      else rank.agg(sum("rank")).head().getDouble(0)
-    rank.select(col("id"), round(col("rank") / lit(total), 8).as("rank"))
-      .orderBy("id")
-  }
-
-  /** Weighted twin of [[pageRankLocal]]: contributions are
-    * rank(s)·w/W(s) and EVERY id keeps an identity row each iteration
-    * (the distributed union with ids), non-id contribution targets
-    * ride along exactly like the union-aggregate. */
-  private def weightedPageRankLocal(ids: DataFrame, e: DataFrame, n: Double,
-                                    damping: Double,
-                                    iterations: Int): DataFrame = {
+  /** [[rankFixpoint]] on the driver: the same formula, presence rule
+    * and final normalization over packed primitive arrays (one collect
+    * job for the ids, one for the (src, dst[, w]) edges); only called
+    * under the gate. */
+  private def rankFixpointLocal(ids: DataFrame, edges: DataFrame,
+                                weight: Option[Column],
+                                sources: Option[Seq[Long]], n: Double,
+                                damping: Double, iterations: Int): DataFrame = {
     val spark = ids.sparkSession
     val Array(idArr) = LocalGraph.packed(ids.select(col("id").cast("long")), 1)
-    // one collect so (src, dst, w) stay row-aligned
-    val eRows = e.select(col("src").cast("long"), col("dst").cast("long"),
-      col("w")).collect()
-    val srcL = eRows.map(_.getLong(0)); val dstL = eRows.map(_.getLong(1))
-    val wArr = eRows.map(_.getDouble(2))
+    val (Array(srcL, dstL), ws) = LocalGraph.packedLD(edges.select(
+      Seq(col("src").cast("long"), col("dst").cast("long")) ++ weight: _*),
+      2, weight.size)
+    val wArr = ws.headOption.getOrElse(Array.fill(srcL.length)(1.0))
+    require(wArr.forall(_ > 0), NonPositiveWeight)
+    // compact universe: node ids first, then any edge endpoint beyond them
     val idx = new LocalGraph.Index(idArr.length + srcL.length)
     idArr.foreach(idx.ix)
-    val nIds = idArr.length
+    val nIds = idx.size
     val srcIx = srcL.map(idx.ix); val dstIx = dstL.map(idx.ix)
     val u = idx.size
     val wsum = new Array[Double](u)
     var k = 0
     while (k < srcIx.length) { wsum(srcIx(k)) += wArr(k); k += 1 }
     var rank = new Array[Double](u)
-    val inRank = new Array[Boolean](u)
-    java.util.Arrays.fill(inRank, 0, nIds, true)
-    var i = 0
-    while (i < nIds) { rank(i) = 1.0 / n; i += 1 }
-    val base = (1.0 - damping) / n
+    val inRank = new Array[Boolean](u) // has a rank row this iteration
+    val tele = new Array[Double](u)
+    val base = sources match {
+      case None =>
+        java.util.Arrays.fill(rank, 0, nIds, 1.0 / n)
+        java.util.Arrays.fill(inRank, 0, nIds, true)
+        (1.0 - damping) / n
+      case Some(srcs) =>
+        val s = srcs.size.toDouble
+        srcs.foreach { v =>
+          val i = idx.get(v)
+          if (i >= 0 && i < nIds) {
+            tele(i) = (1.0 - damping) / s; rank(i) = 1.0 / s; inRank(i) = true
+          }
+        }
+        require(inRank.contains(true), NoSourceInNodes)
+        0.0
+    }
     var it = 0
     while (it < iterations) {
       val acc = new Array[Double](u)
@@ -801,10 +851,10 @@ object Community {
         k += 1
       }
       val next = new Array[Double](u)
-      i = 0
+      var i = 0
       while (i < u) {
         val present = i < nIds || hit(i)
-        if (present) next(i) = base + damping * acc(i)
+        if (present) next(i) = base + tele(i) + damping * acc(i)
         inRank(i) = present
         i += 1
       }
@@ -812,187 +862,7 @@ object Community {
       it += 1
     }
     var total = 0.0
-    i = 0
-    while (i < u) { if (inRank(i)) total += rank(i); i += 1 }
-    import spark.implicits._
-    (0 until u).filter(inRank(_))
-      .map(i => (idx.id(i), math.rint(rank(i) / total * 1e8) / 1e8))
-      .toDF("id", "rank").orderBy("id")
-  }
-
-  /** PageRank on the driver: the same per-iteration formula as the
-    * distributed loop — rank' = (1−d)/n + d·Σ_in rank/outdeg over the
-    * edge multiset, dangling mass dropped, contributions to ids outside
-    * the node set ride along for one iteration exactly like the
-    * distributed union-aggregate — followed by the same final
-    * sum-normalization. Edges/nodes arrive as packed primitive arrays
-    * (one collect job each); only called under the driver-size gate. */
-  private def pageRankLocal(ids: DataFrame, edges: DataFrame, n: Double,
-                            damping: Double, iterations: Int): DataFrame = {
-    val spark = ids.sparkSession
-    val Array(idArr) = LocalGraph.packed(ids.select(col("id").cast("long")), 1)
-    val Array(srcL, dstL) = LocalGraph.packed(
-      edges.select(col("src").cast("long"), col("dst").cast("long")), 2)
-    // compact universe: node ids first, then any edge endpoint beyond them
-    val idx = new LocalGraph.Index(idArr.length + srcL.length)
-    idArr.foreach(idx.ix)
-    val nIds = idArr.length
-    val srcIx = srcL.map(idx.ix); val dstIx = dstL.map(idx.ix)
-    val u = idx.size
-    val odeg = new Array[Long](u)
-    srcIx.foreach(s => odeg(s) += 1)
-    var rank = new Array[Double](u)
-    val inRank = new Array[Boolean](u) // has a rank row this iteration
-    java.util.Arrays.fill(inRank, 0, nIds, true)
     var i = 0
-    while (i < nIds) { rank(i) = 1.0 / n; i += 1 }
-    val base = (1.0 - damping) / n
-    var it = 0
-    while (it < iterations) {
-      val acc = new Array[Double](u)
-      val hit = new Array[Boolean](u)
-      var k = 0
-      while (k < srcIx.length) {
-        val s = srcIx(k)
-        if (inRank(s)) { acc(dstIx(k)) += rank(s) / odeg(s); hit(dstIx(k)) = true }
-        k += 1
-      }
-      val next = new Array[Double](u)
-      i = 0
-      while (i < u) {
-        val present = i < nIds || hit(i)
-        if (present) next(i) = base + damping * acc(i)
-        inRank(i) = present
-        i += 1
-      }
-      rank = next
-      it += 1
-    }
-    var total = 0.0
-    i = 0
-    while (i < u) { if (inRank(i)) total += rank(i); i += 1 }
-    import spark.implicits._
-    (0 until u).filter(inRank(_))
-      .map(i => (idx.id(i), rank(i) / total)).toDF("id", "rank")
-  }
-
-  /** Personalized PageRank (random walk with restart): the teleport
-    * mass lands only on the `sources` set instead of uniformly —
-    * rank' = (1−d)·1_{v∈S}/|S| + d·Σ_in rank/outdeg, started from the
-    * uniform distribution over S, final sum-normalization. The
-    * proximity ranking behind "related nodes" / seeded recommendation
-    * queries (Jeh & Widom 2003 / Page et al.'s personalization
-    * vector). Plan shape is [[pageRank]]'s — the per-node teleport
-    * folds INTO the identity rows (c = tele/d, so d·Σc absorbs the
-    * teleport term) and each iteration stays one hash join + ONE
-    * map-side-combined aggregation, no join-back. Dual regime under
-    * the standard driver gate. Output: (id, rank) over the node set
-    * plus any edge-reached ids, rounded nowhere (callers round). */
-  def personalizedPageRank(nodes: DataFrame, edges: DataFrame,
-                           sources: Seq[Long], damping: Double,
-                           iterations: Int): DataFrame = {
-    require(sources.nonEmpty, "personalized PageRank needs >= 1 source")
-    val (ids, nI) = Probe.checkpointCounted(nodes.select("id"))
-    if (Tuning.fits(nI)) {
-      val (eAll, nEAll) = Probe.checkpointCounted(edges.select("src", "dst"))
-      if (Tuning.fits(nEAll))
-        return pprLocal(ids, eAll, sources, damping, iterations)
-    }
-    val s = sources.size.toDouble
-    val isSrc = col("id").isin(sources: _*)
-    val e = edges.select("src", "dst")
-    val small = Tuning.fits(nI)
-    val outdeg0 = e.groupBy(col("src").as("src")).agg(count(lit(1)).as("odeg"))
-    val outdeg = if (small) broadcast(outdeg0) else outdeg0
-    val eDeg0 = e.join(outdeg, Seq("src"))
-    val eDeg = (if (small) eDeg0 else eDeg0.repartition(col("src")))
-      .localCheckpoint()
-    // identity rows carry the per-node teleport as c = tele/d so the
-    // single aggregation d·Σc reproduces tele + d·(contribution sum)
-    val teleRows = ids.select(col("id"),
-      (when(isSrc, lit((1.0 - damping) / s)).otherwise(lit(0.0)) /
-        lit(damping)).as("c")).localCheckpoint()
-    var rank = ids.filter(isSrc).withColumn("rank", lit(1.0 / s))
-      .localCheckpoint()
-    var totalObs = Double.NaN
-    for (i <- 1 to iterations) {
-      val contribs = rank.as("r")
-        .join(eDeg.as("edg"), col("r.id") === col("edg.src"))
-        .select(col("edg.dst").as("id"), (col("r.rank") / col("edg.odeg")).as("c"))
-      rank = contribs.unionByName(teleRows)
-        .groupBy("id").agg((lit(damping) * sum("c")).as("rank"))
-      if (i == iterations) {
-        val (ck, mT) = Probe.checkpointObserved(rank, sum("rank").as("t"))
-        rank = ck
-        totalObs = mT("t").asInstanceOf[Double]
-      } else if (i % 3 == 0) rank = rank.localCheckpoint()
-    }
-    val total =
-      if (iterations >= 1) totalObs
-      else rank.agg(sum("rank")).head().getDouble(0)
-    rank.select(col("id"), (col("rank") / lit(total)).as("rank"))
-  }
-
-  /** Driver-gated PPR twin — same teleport-folded iteration over the
-    * packed arrays; float-sum order differences are absorbed by the
-    * callers' rounding exactly as in [[pageRankLocal]]. */
-  private def pprLocal(ids: DataFrame, edges: DataFrame, sources: Seq[Long],
-                       damping: Double, iterations: Int): DataFrame = {
-    val spark = ids.sparkSession
-    val Array(idArr) = LocalGraph.packed(ids.select(col("id").cast("long")), 1)
-    val Array(srcL, dstL) = LocalGraph.packed(
-      edges.select(col("src").cast("long"), col("dst").cast("long")), 2)
-    val idx = new LocalGraph.Index(idArr.length + srcL.length)
-    idArr.foreach(idx.ix)
-    val nIds = idArr.length
-    val srcIx = srcL.map(idx.ix); val dstIx = dstL.map(idx.ix)
-    val u = idx.size
-    val odeg = new Array[Long](u)
-    srcIx.foreach(s => odeg(s) += 1)
-    val srcSet = sources.toSet
-    val sN = sources.size.toDouble
-    val tele = new Array[Double](u)
-    var i = 0
-    while (i < nIds) {
-      if (srcSet(idArr(i))) tele(idx.get(idArr(i))) = (1.0 - damping) / sN
-      i += 1
-    }
-    var rank = new Array[Double](u)
-    val inRank = new Array[Boolean](u)
-    i = 0
-    while (i < nIds) {
-      val v = idx.get(idArr(i))
-      if (srcSet(idArr(i))) { rank(v) = 1.0 / sN; inRank(v) = true }
-      i += 1
-    }
-    var it = 0
-    while (it < iterations) {
-      val acc = new Array[Double](u)
-      val hit = new Array[Boolean](u)
-      var k = 0
-      while (k < srcIx.length) {
-        val s = srcIx(k)
-        if (inRank(s)) { acc(dstIx(k)) += rank(s) / odeg(s); hit(dstIx(k)) = true }
-        k += 1
-      }
-      // identity (teleport) rows exist for every node in the id set;
-      // contribution-reached ids outside it ride along — and drop out
-      // the round they stop receiving rows, exactly like the
-      // distributed union-aggregate (and pageRankLocal's hit flags)
-      val next = new Array[Double](u)
-      i = 0
-      while (i < u) {
-        val present = i < nIds || hit(i)
-        if (present) next(i) = (if (i < nIds) tele(i) else 0.0) +
-          damping * acc(i)
-        inRank(i) = present
-        i += 1
-      }
-      rank = next
-      it += 1
-    }
-    var total = 0.0
-    i = 0
     while (i < u) { if (inRank(i)) total += rank(i); i += 1 }
     import spark.implicits._
     (0 until u).filter(inRank(_))

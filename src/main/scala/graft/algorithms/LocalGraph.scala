@@ -18,27 +18,25 @@ private[graft] object LocalGraph {
 
   /** Collect `cols` LONG columns of `df` as column-major primitive
     * arrays, one collect job. */
-  def packed(df: DataFrame, cols: Int): Array[Array[Long]] = {
-    val parts = df.rdd.mapPartitions { it =>
-      val bs = Array.fill(cols)(Array.newBuilder[Long])
-      it.foreach { r => var c = 0; while (c < cols) { bs(c) += r.getLong(c); c += 1 } }
-      Iterator.single(bs.map(_.result()))
-    }.collect() // per-partition, per-column long arrays
-    Array.tabulate(cols)(c => parts.flatMap(_(c)))
-  }
+  def packed(df: DataFrame, cols: Int): Array[Array[Long]] =
+    packedLD(df, cols, 0)._1
 
-  /** Collect one LONG column followed by `dblCols` DOUBLE columns. */
-  def packedLD(df: DataFrame, dblCols: Int): (Array[Long], Array[Array[Double]]) = {
+  /** Collect `longCols` LONG columns followed by `dblCols` DOUBLE
+    * columns of `df` as column-major primitive arrays, one collect job
+    * (so the columns stay row-aligned). */
+  def packedLD(df: DataFrame, longCols: Int,
+               dblCols: Int): (Array[Array[Long]], Array[Array[Double]]) = {
     val parts = df.rdd.mapPartitions { it =>
-      val lb = Array.newBuilder[Long]
+      val lbs = Array.fill(longCols)(Array.newBuilder[Long])
       val dbs = Array.fill(dblCols)(Array.newBuilder[Double])
       it.foreach { r =>
-        lb += r.getLong(0)
-        var c = 0; while (c < dblCols) { dbs(c) += r.getDouble(1 + c); c += 1 }
+        var c = 0; while (c < longCols) { lbs(c) += r.getLong(c); c += 1 }
+        c = 0; while (c < dblCols) { dbs(c) += r.getDouble(longCols + c); c += 1 }
       }
-      Iterator.single((lb.result(), dbs.map(_.result())))
-    }.collect()
-    (parts.flatMap(_._1), Array.tabulate(dblCols)(c => parts.flatMap(_._2(c))))
+      Iterator.single((lbs.map(_.result()), dbs.map(_.result())))
+    }.collect() // per-partition, per-column primitive arrays
+    (Array.tabulate(longCols)(c => parts.flatMap(_._1(c))),
+      Array.tabulate(dblCols)(c => parts.flatMap(_._2(c))))
   }
 
   /** Compacting long-id → dense-int index; remembers insertion order so

@@ -215,18 +215,11 @@ object Traversal {
   private def aStarLocal(e: DataFrame, h: DataFrame, srcId: Long, dstId: Long,
                          maxIterations: Int): DataFrame = {
     val ss = e.sparkSession
-    val parts = e.select(col("src").cast("long"), col("dst").cast("long"),
-        col("weight").cast("double")).rdd
-      .mapPartitions { it =>
-        val sb = Array.newBuilder[Long]; val db = Array.newBuilder[Long]
-        val wb = Array.newBuilder[Double]
-        it.foreach { r => sb += r.getLong(0); db += r.getLong(1); wb += r.getDouble(2) }
-        Iterator.single((sb.result(), db.result(), wb.result()))
-      }.collect()
-    val srcA = parts.flatMap(_._1); val dstA = parts.flatMap(_._2)
-    val wA = parts.flatMap(_._3)
-    val (hIds, Array(hVals)) = LocalGraph.packedLD(
-      h.select(col("id").cast("long"), col("h").cast("double")), 1)
+    val (Array(srcA, dstA), Array(wA)) = LocalGraph.packedLD(e.select(
+      col("src").cast("long"), col("dst").cast("long"),
+      col("weight").cast("double")), 2, 1)
+    val (Array(hIds), Array(hVals)) = LocalGraph.packedLD(
+      h.select(col("id").cast("long"), col("h").cast("double")), 1, 1)
     val hOf = new java.util.HashMap[Long, java.lang.Double](hIds.length * 2)
     var i = 0
     while (i < hIds.length) { hOf.put(hIds(i), hVals(i)); i += 1 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.algorithms.{Centrality, Community, Structure, Traversal}
+import graft.algorithms.{Centrality, Community, Structure, Traversal, Tuning}
 
 /** Algorithm semantics on tiny hand-built graphs with known answers
   * (mirrors the reference's unit tests, e.g. the kcore.rs doc example). */
@@ -387,6 +387,16 @@ class AlgorithmsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(skew(2L) > skew(3L),
       s"heavy lane must pull rank: ${skew(2L)} vs ${skew(3L)}")
+    // a weight <= 0 is rejected in both regimes (a zero out-weight
+    // would divide by zero)
+    for (threshold <- Seq(Tuning.DefaultBroadcastThreshold, 0L); bad <- Seq(0L, -1L))
+      Tuning.withBroadcastThreshold(threshold) {
+        intercept[IllegalArgumentException] {
+          algorithms.Community.weightedPageRank(nodes,
+            ed.map { case (a, b) => (a, b, if (a == 4L) bad else 1L) }
+              .toDF("src", "dst", "cnt"), 0.85, 10)
+        }
+      }
   }
 
   test("reciprocity: mutual pairs counted both ways, one-way edges not") {
@@ -583,9 +593,15 @@ class AlgorithmsSpec extends SparkSpec {
         Seq(1L, 2L, 3L, 4L, 5L), 0.85, 10)
       .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
     pr.foreach { case (id, v) => assert(math.abs(v - pprAll(id)) < 1e-9) }
-    intercept[IllegalArgumentException] {
-      Community.personalizedPageRank(ids(1), e, Seq.empty, 0.85, 3)
-    }
+    // no source at all, or none inside the node set (no restart mass to
+    // normalize): rejected in both regimes
+    for (threshold <- Seq(Tuning.DefaultBroadcastThreshold, 0L);
+         (nodes, srcs) <- Seq(ids(1) -> Seq.empty[Long], ids(1, 2, 3) -> Seq(99L)))
+      Tuning.withBroadcastThreshold(threshold) {
+        intercept[IllegalArgumentException] {
+          Community.personalizedPageRank(nodes, e, srcs, 0.85, 3)
+        }
+      }
   }
 
   test("labelPropagation: two cliques with a bridge keep two communities") {

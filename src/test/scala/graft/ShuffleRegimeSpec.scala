@@ -253,6 +253,28 @@ class ShuffleRegimeSpec extends SparkSpec {
     }
   }
 
+  test("pagerank family: regimes agree when edges reach ids outside the node set") {
+    // ids 380..399 are only edge endpoints here: a contribution target
+    // outside the node set rides along for the iteration it is reached
+    // (PageRank's base applies to it, PPR's teleport does not)
+    val nodes = nodeDf.filter(col("id") < 380)
+    val wedges = edgeDf.withColumn("cnt", (col("src") % 7) + 1)
+    val variants = Seq[(String, () => DataFrame)](
+      "pr" -> (() => Community.pageRank(nodes, edgeDf, 0.85, 10)),
+      "wpr" -> (() => Community.weightedPageRank(nodes, wedges, 0.85, 10)),
+      "ppr" -> (() => Community.personalizedPageRank(nodes, edgeDf,
+        Seq(0L, 17L, 202L), 0.85, 10)))
+    variants.foreach { case (name, run) =>
+      def ranks = run().collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val (b, s) = both(ranks)
+      assert(b.keySet == s.keySet && b.exists(_._1 >= 380L),
+        s"$name key sets differ or miss the outside ids")
+      b.foreach { case (id, v) =>
+        assert(math.abs(v - s(id)) < 1e-9, s"$name($id) differs across regimes")
+      }
+    }
+  }
+
   test("dag longest paths: shuffle regime ≡ broadcast regime (bit-equal)") {
     // orient small→large id: acyclic by construction; integer dists
     val dagEdges = edgeDf.filter(col("src") < col("dst"))
