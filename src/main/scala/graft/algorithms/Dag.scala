@@ -15,7 +15,10 @@ import org.apache.spark.sql.functions._
   * weights, the Kahn/Coffman–Graham layer. On a DAG the fixpoint lands
   * after `depth` rounds (depth = longest path edge count); each round is
   * ONE frontier⋈edges hash join, a map-side-combined max roll-up, and a
-  * monotone improve-filter. State is one (id, dist) row per node — the
+  * monotone merge into the state that flags the improved rows — one
+  * checkpoint per round ([[Probe]]'s flag-column pattern: the improved
+  * count rides that checkpoint and the next frontier is a filter over
+  * it). State is one (id, dist) row per node — the
   * kernel scales to any |V| that shuffles, and rounds are bounded by DAG
   * depth, which scheduling/build graphs keep shallow by construction.
   * Weights stay BIGINT end to end so the fold is exact in every engine.
@@ -25,7 +28,8 @@ import org.apache.spark.sql.functions._
   * finish certifies acyclicity of the reachable subgraph). That
   * certification requires strictly positive weights — a zero-weight
   * cycle improves nothing and would converge silently — so weights are
-  * validated w ≥ 1 up front (free: the min rides the edge materialize).
+  * validated non-null and w ≥ 1 up front (free: the non-null count and
+  * the min ride the edge materialize).
   */
 object Dag {
 
@@ -42,22 +46,26 @@ object Dag {
   def longestPaths(nodes: DataFrame, edges: DataFrame, maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, "longestPaths needs maxRounds >= 1")
     // Materialize the edge view once — it is re-joined every round. The
-    // min-weight probe rides the same job: the acyclicity certification
+    // weight probes ride the same action: the acyclicity certification
     // below (clean finish ⇒ no cycle) is only sound for strictly
     // positive weights — a zero-weight cycle converges without throwing
     // — so reject w < 1 up front rather than silently weakening the
-    // guarantee.
+    // guarantee, and a null weight likewise (it would relax to nothing
+    // on one regime and fail the packed collect on the other).
     val (e, mE) = Probe.checkpointObserved(
       edges.select(col("src"), col("dst"), col("w").cast("long").as("w")),
-      count(lit(1)).as("m"), min(col("w")).as("wmin"))
-    require(mE("m").asInstanceOf[Long] == 0L ||
-        mE("wmin").asInstanceOf[Long] >= 1L,
+      count(lit(1)).as("m"), count(col("w")).as("wn"), min(col("w")).as("wmin"))
+    val m = mE("m").asInstanceOf[Long]
+    require(mE("wn").asInstanceOf[Long] == m,
+      "longestPaths needs a non-null integer weight on every edge")
+    require(m == 0L || mE("wmin").asInstanceOf[Long] >= 1L,
       "longestPaths needs strictly positive integer weights (w >= 1): " +
         "a zero-weight cycle would converge and defeat cycle detection")
     val (n0, nN) = Probe.checkpointCounted(nodes.select(col("id")).distinct())
-    if (Tuning.fits(mE("m").asInstanceOf[Long], nN))
+    if (Tuning.fits(m, nN))
       return longestPathsLocal(n0, e, maxRounds)
-    var best = n0.withColumn("dist", lit(0L)).localCheckpoint()
+    // n0 is already a checkpoint, so the seed state needs none of its own.
+    var best = n0.withColumn("dist", lit(0L))
     var frontier = best
     var improved = 1L
     var round = 0
@@ -68,18 +76,17 @@ object Dag {
       val cand = frontier.join(e, frontier("id") === e("src"))
         .select(e("dst").as("id"), (frontier("dist") + e("w")).as("cd"))
         .groupBy("id").agg(max("cd").as("cd"))
-      // Improvement probe rides the checkpoint job (one job per round).
-      val (imp, nImp) = Probe.checkpointCounted(
-        cand.join(best, Seq("id"))
-          .filter(col("cd") > col("dist"))
-          .select(col("id"), col("cd").as("dist")))
-      improved = nImp
-      if (improved > 0) {
-        best = best.join(imp.withColumnRenamed("dist", "nd"), Seq("id"), "left")
-          .select(col("id"), coalesce(col("nd"), col("dist")).as("dist"))
-          .localCheckpoint()
-        frontier = imp
-      }
+      // Merge into the state and flag the improved rows: one checkpoint
+      // per round, the improved count rides it, and the next frontier is
+      // a filter over it (no job).
+      val imp = coalesce(col("cd") > col("dist"), lit(false))
+      val (next, mR) = Probe.checkpointObserved(
+        best.join(cand, Seq("id"), "left").select(col("id"),
+          when(imp, col("cd")).otherwise(col("dist")).as("dist"), imp.as("imp")),
+        count(when(col("imp"), 1)).as("imp"))
+      improved = mR("imp").asInstanceOf[Long]
+      best = next.select(col("id"), col("dist"))
+      frontier = next.filter(col("imp")).select(col("id"), col("dist"))
     }
     if (improved > 0)
       throw new IllegalStateException(

@@ -6,14 +6,23 @@ import org.apache.spark.sql.functions.{count, lit}
 /** Checkpoint-fused convergence probes for iterative kernels.
   *
   * Every DataFrame fixpoint here needs two things per round: materialize
-  * the new state (`localCheckpoint`, an eager job) and read a scalar
+  * the new state (`localCheckpoint`, an eager action) and read a scalar
   * summary of it — a count, or a monotone label sum — to decide
-  * convergence. Running the probe as its own aggregation job doubles the
-  * per-round job count, and on a real cluster each extra job is a full
-  * driver/scheduler round trip. `Dataset.observe` (CollectMetrics)
-  * piggybacks the aggregates onto the checkpoint job itself, so each
-  * round schedules exactly one job and the probe values ride back on its
-  * accumulators.
+  * convergence. Running the probe as its own aggregation doubles the
+  * per-round action count, and on a real cluster each extra action is a
+  * full driver/scheduler round trip. `Dataset.observe` (CollectMetrics)
+  * piggybacks the aggregates onto the checkpoint action itself, so each
+  * round runs exactly one action and the probe values ride back on its
+  * accumulators. (One action, not one job: under AQE a checkpoint
+  * schedules a job per query stage, typically about four.)
+  *
+  * The flag-column pattern keeps a round at one checkpoint when the
+  * round also needs a subset of its new state (the changed rows, the
+  * frontier, the nodes to drop): compute the state with a boolean flag
+  * column, observe `count(when(flag, 1))` on its checkpoint, and take
+  * the subset as `state.filter(flag)` — a filter over the checkpoint,
+  * which runs no job — instead of checkpointing the subset separately.
+  * `Dag.longestPaths` and `Structure.kcoreMembers` use it.
   */
 object Probe {
 

@@ -1266,7 +1266,7 @@ object Structure {
     // with rounds ≥ the peel depth this is exactly the k-core and the
     // fixed-round oracle matches by construction either way; early
     // convergence when nothing dies (all remaining rounds are no-ops).
-    // Edge count rides the checkpoint for the regime gate (one job).
+    // Edge count rides the checkpoint for the regime gate (one action).
     val (e, nE) = Probe.checkpointCounted(symEdges.select("src", "dst"))
     // Dual regime: while the edge list fits the driver gate, run the
     // synchronous peel over a packed edge collect — each distributed round
@@ -1275,24 +1275,28 @@ object Structure {
     // ShuffleRegimeSpec forces the gate to 0 to pin both regimes.
     if (Tuning.fits(nE))
       return kcoreLocal(e, k, rounds)
-    var deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
-      .localCheckpoint()
+    // One checkpoint per peel round: the under-k count rides the degree
+    // checkpoint, and the dead set is a filter over it (no job).
+    val underK = col("d") < k
+    def checkpointDeg(df: DataFrame): (DataFrame, Long) = {
+      val (out, m) = Probe.checkpointObserved(df, count(when(underK, 1)).as("dead"))
+      (out, m("dead").asInstanceOf[Long])
+    }
+    var (deg, deadCount) =
+      checkpointDeg(e.groupBy(col("src").as("id")).agg(count(lit(1)).as("d")))
     var r = 0
     var converged = false
     while (r < rounds && !converged) {
       r += 1
-      // Count rides the checkpoint job (Dataset.observe) — one job per
-      // peel round instead of two.
-      val (dead, deadCount) = Probe.checkpointCounted(deg.filter(col("d") < k).select("id"))
       if (deadCount == 0L) converged = true
       else {
-        val db = Tuning.broadcastIfFits(dead, deadCount)
+        val db = Tuning.broadcastIfFits(deg.filter(underK).select("id"), deadCount)
         val decr = e.join(db.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
           .groupBy(col("dst").as("id")).agg(count(lit(1)).as("dec"))
-        deg = deg.join(db, Seq("id"), "left_anti")
+        val (nextDeg, nextDead) = checkpointDeg(deg.join(db, Seq("id"), "left_anti")
           .join(decr, Seq("id"), "left_outer")
-          .select(col("id"), (col("d") - coalesce(col("dec"), lit(0L))).as("d"))
-          .localCheckpoint()
+          .select(col("id"), (col("d") - coalesce(col("dec"), lit(0L))).as("d")))
+        deg = nextDeg; deadCount = nextDead
       }
     }
     deg.select("id")

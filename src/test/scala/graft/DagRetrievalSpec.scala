@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.algorithms.Dag
+import graft.algorithms.{Dag, Tuning}
 import graft.pipeline.{Corpus, Dedup, Similarity}
 import graft.streaming.EventStreams
 
@@ -42,22 +42,45 @@ class DagRetrievalSpec extends SparkSpec {
     assert(got == Map(1L -> 0L, 2L -> 5L, 3L -> 2L, 4L -> 9L))
   }
 
+  // Both regimes: the default gate (3-node inputs take the driver twin)
+  // and threshold 0 (the distributed frontier loop).
+  private def bothRegimes(body: => Unit): Unit = {
+    body
+    Tuning.withBroadcastThreshold(0L)(body)
+  }
+
   test("longestPaths: cycle throws instead of spinning") {
     val e = wedges((1L, 2L, 1L), (2L, 3L, 1L), (3L, 1L, 1L))
-    val ex = intercept[IllegalStateException] {
-      Dag.longestPaths(ids(1, 2, 3), e, 8).collect()
+    bothRegimes {
+      val ex = intercept[IllegalStateException] {
+        Dag.longestPaths(ids(1, 2, 3), e, 8).collect()
+      }
+      assert(ex.getMessage.contains("cycle"))
     }
-    assert(ex.getMessage.contains("cycle"))
   }
 
   test("longestPaths: zero/negative weights rejected (acyclicity cert needs w >= 1)") {
     // A zero-weight cycle converges without improving — it would defeat
     // the clean-finish-certifies-acyclicity contract, so w < 1 throws.
     val e = wedges((1L, 2L, 0L), (2L, 1L, 0L))
-    val ex = intercept[IllegalArgumentException] {
-      Dag.longestPaths(ids(1, 2), e, 8).collect()
+    bothRegimes {
+      val ex = intercept[IllegalArgumentException] {
+        Dag.longestPaths(ids(1, 2), e, 8).collect()
+      }
+      assert(ex.getMessage.contains("positive"))
     }
-    assert(ex.getMessage.contains("positive"))
+  }
+
+  test("longestPaths: a null weight is rejected in both regimes") {
+    // Unchecked, the driver twin failed its packed collect on the null
+    // and the frontier loop relaxed the edge to nothing.
+    val e = Seq((1L, 2L, None), (2L, 3L, Some(1L))).toDF("src", "dst", "w")
+    bothRegimes {
+      val ex = intercept[IllegalArgumentException] {
+        Dag.longestPaths(ids(1, 2, 3), e, 8).collect()
+      }
+      assert(ex.getMessage.contains("non-null"))
+    }
   }
 
   // ---- Corpus.hybridRrf ----

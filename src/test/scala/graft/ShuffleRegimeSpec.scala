@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.algorithms.{Community, Structure, Tuning}
 
 /** The dual-regime kernels (CC, SCC, PageRank, k-core, triangles) gate
@@ -67,6 +71,25 @@ class ShuffleRegimeSpec extends SparkSpec {
   test("k-core members: shuffle regime ≡ broadcast regime") {
     val (b, s) = both(asSet(Structure.kcoreMembers(symDf, 4, 30)))
     assert(b.nonEmpty && b == s)
+  }
+
+  private def symOf(pairs: (Long, Long)*): DataFrame =
+    (pairs ++ pairs.map(_.swap)).toDF("src", "dst")
+
+  test("k-core members: peel depth > 1 and an empty edge set, both regimes") {
+    // Triangle 1-2-3 with the tail 3-4-5-6: k = 2 peels 6, then 5, then
+    // 4 (three killing rounds); the core is the triangle.
+    val tail = symOf(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L, 4L -> 5L, 5L -> 6L)
+    val (b, s) = both(asSet(Structure.kcoreMembers(tail, 2, 10)))
+    assert(b == Set(Seq(1L), Seq(2L), Seq(3L)) && b == s)
+    // A path peels from both ends, two nodes a round, to nothing.
+    val path = symOf((1L to 9L).map(i => i -> (i + 1)): _*)
+    val (bp, sp) = both(asSet(Structure.kcoreMembers(path, 2, 10)))
+    assert(bp.isEmpty && sp.isEmpty)
+    // An empty edge set fits even a 0-row gate; -1 forces the shuffle loop.
+    val none = symOf()
+    assert(Structure.kcoreMembers(none, 2, 5).isEmpty)
+    assert(Tuning.withBroadcastThreshold(-1L)(Structure.kcoreMembers(none, 2, 5)).isEmpty)
   }
 
   test("coloring: shuffle regime (JP rounds) ≡ driver sequential greedy") {
@@ -283,6 +306,50 @@ class ShuffleRegimeSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val (b, s) = both(lp)
     assert(b == s && b.nonEmpty)
+  }
+
+  /** `localCheckpoint` actions that `body` runs, counted by a
+    * `QueryExecutionListener` (its events arrive on the listener bus,
+    * drained before and after). */
+  private def checkpointsIn(body: => Unit): Int = {
+    val n = new AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") n.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      ListenerBusDrain(spark.sparkContext)
+      n.get
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("dag longest paths and k-core: one checkpoint per shuffle-regime round") {
+    // A unit chain of depth D runs D + 1 relaxation rounds (the last one
+    // improves nothing); a path of 2p nodes peels p killing rounds plus
+    // one that finds no node under k = 2. Fixed costs (edge and node
+    // checkpoints) cancel in the difference, which must equal the round
+    // difference — two checkpoints per round would double it.
+    def chain(d: Int): Unit = {
+      val e = (0 until d).map(i => (i.toLong, i + 1L, 1L)).toDF("src", "dst", "w")
+      val n = (0 to d).map(_.toLong).toDF("id")
+      val got = graft.algorithms.Dag.longestPaths(n, e, 50)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == (0 to d).map(i => i.toLong -> i.toLong).toMap)
+    }
+    def path(nodes: Int): Unit = {
+      val sym = symOf((1 until nodes).map(i => i.toLong -> (i + 1L)): _*)
+      assert(Structure.kcoreMembers(sym, 2, 50).isEmpty)
+    }
+    Tuning.withBroadcastThreshold(0L) {
+      val (dagShort, dagLong) = (checkpointsIn(chain(2)), checkpointsIn(chain(6)))
+      assert(dagLong - dagShort == 4, s"chain checkpoints $dagShort → $dagLong")
+      val (peelShort, peelLong) = (checkpointsIn(path(4)), checkpointsIn(path(10)))
+      assert(peelLong - peelShort == 3, s"path checkpoints $peelShort → $peelLong")
+    }
   }
 
   test("simrank: shuffle regime ≡ broadcast regime (1e-6 after 6-dp round)") {
