@@ -90,8 +90,12 @@ object Bench {
       case _ => -1L
     }
 
+  /** One timed row. A `failed` row threw: its wall time measures the
+    * failure, so it is listed under "failed" and kept out of every
+    * timing figure (queries, total, control ratios, self-heal). */
   final case class Row(name: String, sec: Double, gcMs: Long, cpuSec: Double,
-                       tSec: Double, heapMb: Long, loadAvg: Double)
+                       tSec: Double, heapMb: Long, loadAvg: Double,
+                       failed: Boolean)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -133,13 +137,15 @@ object Bench {
       // Force every projected expression to execute: a count() would let
       // Catalyst prune the projection (map-only queries would be measured
       // as scan+count). toRdd.foreach evaluates each output row fully.
-      try { fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ()) }
-      catch { case e: Throwable =>
-        // loud: a throwing row otherwise records a sub-0.1 s wall time
-        // that reads as a speedup (a real near-miss, round 15)
-        System.err.println(s"BENCH ROW FAILED $name: ${e.getClass.getName}: " +
-          s"${String.valueOf(e.getMessage).take(300)}")
-      }
+      val failed =
+        try { fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ()); false }
+        catch { case e: Throwable =>
+          // loud, and marked: a throwing row's wall time would read as
+          // a speedup (a real near-miss, round 15)
+          System.err.println(s"BENCH ROW FAILED $name: ${e.getClass.getName}: " +
+            s"${String.valueOf(e.getMessage).take(300)}")
+          true
+        }
       val sec = (System.nanoTime() - t0) / 1e9
       val cpu1 = processCpuNanos()
       // Per-row JVM GC-time and process-CPU deltas: a co-tenant row is
@@ -158,7 +164,8 @@ object Bench {
         if (cpu0 < 0 || cpu1 < 0) -1.0 else (cpu1 - cpu0) / 1e9,
         (System.nanoTime() - suiteT0) / 1e9,
         (rt.totalMemory - rt.freeMemory) / (1024 * 1024),
-        BigDecimal(load).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble)
+        BigDecimal(load).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble,
+        failed)
     }
     // Shared derived-frame builds as explicit build:* pseudo-rows —
     // each cache is materialized (and persisted) HERE, so consumer
@@ -174,7 +181,9 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) => timed(name, fn) }
-    val firstPass = builds ++ results
+    val (failedRows, firstPass) = (builds ++ results).partition(_.failed)
+    val failedNames = failedRows.map(r => "\"" + r.name + "\"").sorted
+      .mkString("[", ",", "]")
     // End-of-suite SELF-HEAL, ITERATED: any QUERY row over the 2×+0.1 s
     // gate vs the frozen BASELINE table is re-measured after the suite
     // — a transient co-tenancy cluster self-resolves (the round-12
@@ -189,7 +198,8 @@ object Bench {
     // discipline applied within a run); `self_heal` records every
     // attempt. build:* rows are excluded — their caches are already
     // materialized, so a re-run would time the cache hit, not the
-    // build.
+    // build. Failed rows are never healed, and a failed re-measure
+    // never replaces a row's best.
     val frozen = frozenTable()
     val queryFns = SparkEntry.queries
     val healHistory = scala.collection.mutable.Map.empty[String, Vector[Row]]
@@ -208,7 +218,9 @@ object Bench {
       toHeal.foreach { n =>
         val again = timed(n, queryFns(n))
         healHistory(n) = healHistory.getOrElse(n, Vector(best(n))) :+ again
-        if (again.sec < best(n).sec) { best += (n -> again); progressed = true }
+        if (!again.failed && again.sec < best(n).sec) {
+          best += (n -> again); progressed = true
+        }
       }
       if (toHeal.nonEmpty)
         System.err.println(s"BENCH SELF-HEAL pass $pass (${toHeal.size} rows " +
@@ -314,7 +326,7 @@ object Bench {
       s""""host_suspect_rows":${suspects.size},"host_suspect":$suspectNames,""" +
       s""""self_heal":$selfHeal,""" +
       s""""gc_ms":$gcs,"cpu_sec":$cpu,"t_sec":$tsec,"heap_mb":$heap,""" +
-      s""""load_avg":$load,"sf":"$sfDir","queries":$qs}"""
+      s""""load_avg":$load,"sf":"$sfDir","failed":$failedNames,"queries":$qs}"""
     println(json)
     // Also persist the artifact: the driver captures only a bounded tail
     // of stdout, which truncated the one-line JSON mid-map two rounds
@@ -336,7 +348,7 @@ object Bench {
         BigDecimal(r.sec).setScale(3, BigDecimal.RoundingMode.HALF_UP))
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""rows":${all.size},"controls_ok":$controlsOk,""" +
+      s""""rows":${all.size},"failed":$failedNames,"controls_ok":$controlsOk,""" +
       s""""host_ok":$hostOk,"median_foreign_load":$medianLoad,""" +
       s""""sf":"$sfDir","slowest":$slowest,""" +
       s""""full_artifact":"${outPath.toAbsolutePath}"}""")

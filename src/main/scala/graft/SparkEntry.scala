@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.graph.{DerivedGraphs, GraphBuilder, PropertyGraph}
+import graft.graph.{DerivedGraphs, GraphBuilder, Memo, PropertyGraph}
 import graft.graph.GraphBuilder.{TAG, CustomerTag, PartTag}
 import graft.ops.GraphQuery
 import graft.algorithms.{Centrality, Community, Structure, Traversal}
@@ -35,10 +35,8 @@ object SparkEntry {
     * the un-distincted hashed stream has no such shuffle.) Minhash
     * candidate pairs are likewise the input of two queries — compute
     * once. */
-  private val mhCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def hashedShinglesCached(s: SparkSession, d: String): DataFrame =
-    mhCache.getOrElseUpdate((s, d + "#hs"),
+    Memo(s, d, "hashed_shingles")(
       Dedup.hashedShingles(GraphBuilder.table(s, d, "documents")).persist())
   /** k=16 MinHash signature frame — consumed by build:minhash_pairs,
     * q_banding_curve AND q_minhash_audit (round 15: each rebuilt it
@@ -46,21 +44,21 @@ object SparkEntry {
     * localCheckpoint inside the first consumer (build:minhash_pairs in
     * bench order, so attribution stays with the build row). */
   private def minhashSigsCached(s: SparkSession, d: String): DataFrame =
-    mhCache.getOrElseUpdate((s, d + "#sig:16"),
+    Memo(s, d, "minhash_sigs")(
       Dedup.minhashSignatures(GraphBuilder.table(s, d, "documents"), 16,
         Some(hashedShinglesCached(s, d))).localCheckpoint())
   private def minhashPairsCached(s: SparkSession, d: String): DataFrame =
-    mhCache.getOrElseUpdate((s, d),
+    Memo(s, d, "minhash_pairs")(
       Dedup.minhashPairs(GraphBuilder.table(s, d, "documents"),
         hashedIn = Some(hashedShinglesCached(s, d)),
         sigsIn = Some(minhashSigsCached(s, d))).persist())
   private def winnowCached(s: SparkSession, d: String): DataFrame =
-    mhCache.getOrElseUpdate((s, d + "#wn"),
+    Memo(s, d, "winnow_fp")(
       TextOps.winnow(GraphBuilder.table(s, d, "documents")).persist())
   /** The capped winnow-pair join is consumed by q_winnow_pairs AND the
     * q_containment candidate union — one computation, one build row. */
   private def winnowPairsCached(s: SparkSession, d: String): DataFrame =
-    mhCache.getOrElseUpdate((s, d + "#wp"),
+    Memo(s, d, "winnow_pairs")(
       TextOps.winnowPairs(GraphBuilder.table(s, d, "documents"),
         fpIn = Some(winnowCached(s, d))).persist())
   /** The three media pair graphs (synthetic near-dup corpora over real
@@ -73,13 +71,13 @@ object SparkEntry {
   private def mediaPairsCached(s: SparkSession, d: String): Seq[(String, DataFrame)] = {
     def docs = GraphBuilder.table(s, d, "documents")
     Seq(
-      "image" -> mhCache.getOrElseUpdate((s, d + "#mp:image"),
+      "image" -> Memo(s, d, "media_pairs", "image")(
         pipeline.Multimodal.imageDedupPairs(
           pipeline.Multimodal.syntheticImageCorpus(docs, "doc_id"), 3).persist()),
-      "audio" -> mhCache.getOrElseUpdate((s, d + "#mp:audio"),
+      "audio" -> Memo(s, d, "media_pairs", "audio")(
         pipeline.Multimodal.audioDedupPairs(
           pipeline.Multimodal.syntheticAudioCorpus(docs, "doc_id"), 3).persist()),
-      "video" -> mhCache.getOrElseUpdate((s, d + "#mp:video"),
+      "video" -> Memo(s, d, "media_pairs", "video")(
         pipeline.Multimodal.hammingPairs64(
           videoHashesCached(s, d), "media_id", "vhash", 3).persist()))
   }
@@ -89,15 +87,13 @@ object SparkEntry {
     * q_cross_modal_dedup's video side, the poster-still synthesis) —
     * memo both so the session pays the payload synthesis once and the
     * container decode once, not once per consumer. */
-  private val mediaCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.Dataset[pipeline.Multimodal.MediaRow]]
   private def videoCorpusCached(s: SparkSession, d: String)
       : org.apache.spark.sql.Dataset[pipeline.Multimodal.MediaRow] =
-    mediaCache.getOrElseUpdate((s, d + "#vc"),
+    Memo(s, d, "video_corpus")(
       pipeline.Multimodal.syntheticVideoCorpus(
         GraphBuilder.table(s, d, "documents"), "doc_id").persist())
   private def videoHashesCached(s: SparkSession, d: String): DataFrame =
-    mhCache.getOrElseUpdate((s, d + "#vh"),
+    Memo(s, d, "video_hashes")(
       pipeline.Multimodal.videoHashes(videoCorpusCached(s, d)).persist())
 
   /** Per-modality media cluster MEMBERSHIP (the dual-regime CC over
@@ -106,7 +102,7 @@ object SparkEntry {
     * modality per session, not per consumer. */
   private def mediaMembershipCached(s: SparkSession, d: String): Seq[(String, DataFrame)] =
     mediaPairsCached(s, d).map { case (m, p) =>
-      m -> mhCache.getOrElseUpdate((s, d + "#mcc:" + m),
+      m -> Memo(s, d, "media_cc", m)(
         Corpus.clusterMembership(p).persist())
     }
 
@@ -114,7 +110,7 @@ object SparkEntry {
     * (the per-edge table) and q_local_bridges (its one-row summary) —
     * one sorted-adjacency intersect pass over the co-occur graph. */
   private def edgeJaccardCached(s: SparkSession, d: String): DataFrame =
-    mhCache.getOrElseUpdate((s, d + "#ej"),
+    Memo(s, d, "edge_jaccard")(
       // partCooccur is canonical (distinct a<b) and session-persisted —
       // assumeDistinct skips the kernel's re-distinct shuffle+checkpoint
       algorithms.Structure.edgeJaccard(DerivedGraphs.partCooccur(s, d),
@@ -128,10 +124,10 @@ object SparkEntry {
     * read the same integer frame: one explode + one k-means per
     * session instead of four explodes + two k-means (round 15). */
   private def ivfKmeansCached(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val iv = mhCache.getOrElseUpdate((s, d + "#iv:1000"),
+    val iv = Memo(s, d, "ivf_int")(
       Similarity.intExploded(GraphBuilder.table(s, d, "embeddings"), 1000)
         .localCheckpoint())
-    val ct = mhCache.getOrElseUpdate((s, d + "#ivfct:8:3:10:1000"),
+    val ct = Memo(s, d, "ivf_kmeans")(
       Similarity.ivfKmeans(iv, 8, 3, 10L))
     (iv, ct)
   }
@@ -141,10 +137,10 @@ object SparkEntry {
     * q_pq_error each re-ran per query (round 15): one build per
     * session, one build:pq_codebook row times it. */
   private def pqCodebookCached(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val iv = mhCache.getOrElseUpdate((s, d + "#pqiv:8:1000"),
+    val iv = Memo(s, d, "pq_int")(
       Similarity.pqExploded(GraphBuilder.table(s, d, "embeddings"), 8, 1000)
         .localCheckpoint())
-    val ct = mhCache.getOrElseUpdate((s, d + "#pqct:8:4:2:10"),
+    val ct = Memo(s, d, "pq_codebook")(
       Similarity.pqCodebook(iv, 8, 4, 2, 10L))
     (iv, ct)
   }
@@ -152,35 +148,23 @@ object SparkEntry {
   /** The training-mix TEXT-gate survivor frame (langId ∧ quality ∧
     * ¬dup ∧ ¬contaminated ∧ ¬eval-slice) — consumed by q_training_mix
     * AND q_training_mix_mm: the gates run once per session. */
-  private def mixSurvivorsCached(s: SparkSession, d: String,
-      minQuality: Double = 0.5, evalPct: Int = 5, gram: Int = 24): DataFrame =
-    // the parameter values live in the cache key: a caller wiring
-    // survivorsIn with non-default gates gets its own frame, never a
-    // silent reuse of the default one (advisor round 15)
-    mhCache.getOrElseUpdate((s, d + s"#mix:$minQuality:$evalPct:$gram"),
-      Corpus.mixTextSurvivors(GraphBuilder.table(s, d, "documents"),
-        minQuality, evalPct, gram).persist())
+  private def mixSurvivorsCached(s: SparkSession, d: String): DataFrame =
+    Memo(s, d, "mix_gates")(
+      Corpus.mixTextSurvivors(GraphBuilder.table(s, d, "documents")).persist())
 
   /** The stride-1 duplicated-span frames (window stream + merged span
     * set) feed BOTH q_dup_spans (report) and q_strip_dup_spans (apply)
     * — one token-explode + document-frequency + window pass, not two. */
-  private val dsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-  private def dupSpanFramesCached(s: SparkSession, d: String,
-      width: Int = 10, minDf: Int = 2): (DataFrame, DataFrame) =
-    // parameters ride the cache key (advisor round 15) — same
-    // discipline as mixSurvivorsCached
-    dsCache.getOrElseUpdate((s, d + s"#$width:$minDf"), {
-      val (wins, spans) =
-        Corpus.dupSpanFrames(GraphBuilder.table(s, d, "documents"),
-          width, minDf)
+  private def dupSpanFramesCached(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    Memo(s, d, "dup_spans") {
+      val (wins, spans) = Corpus.dupSpanFrames(GraphBuilder.table(s, d, "documents"))
       (wins, spans.persist())
-    })
+    }
 
   /** Per-doc shingle-set arrays feed BOTH pair-scoring ops
     * (q_ngram_jaccard, q_containment) — one collect_set pass. */
   private def shingleArraysCached(s: SparkSession, d: String): DataFrame =
-    mhCache.getOrElseUpdate((s, d + "#sa"),
+    Memo(s, d, "shingle_arrays")(
       Dedup.shingleArrays(GraphBuilder.table(s, d, "documents"),
         hashedIn = Some(hashedShinglesCached(s, d))).persist())
 
@@ -188,7 +172,7 @@ object SparkEntry {
     * fertility metric — one merge-stat pass + one apply, one build
     * row. */
   private def bpeSegCached(s: SparkSession, d: String): DataFrame =
-    mhCache.getOrElseUpdate((s, d + "#bpe"),
+    Memo(s, d, "bpe_seg")(
       Corpus.bpeApply(GraphBuilder.table(s, d, "documents")).persist())
 
   /** Per-node triangle counts feed q_triangles (corner sum / 3) and
@@ -196,10 +180,8 @@ object SparkEntry {
     * derived frame, so materialize the |V|-bounded counts once per
     * (session, sfDir). Dual-regime inside trianglesPerNode: local
     * count under the driver gate, distributed enumeration past it. */
-  private val triCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def triangleCountsCached(s: SparkSession, d: String): DataFrame =
-    triCache.getOrElseUpdate((s, d),
+    Memo(s, d, "triangles")(
       Structure.trianglesPerNode(DerivedGraphs.partCooccur(s, d)).persist())
 
   /** The shared derived-frame builds, exposed so Bench can time each
@@ -207,8 +189,11 @@ object SparkEntry {
     * alphabetically-first consumer of each cache absorbs its build
     * cost (q_containment once absorbed BOTH the minhash and winnow
     * builds), and per-query rows need attribution prose to compare
-    * round over round. Each entry materializes + persists its cache;
-    * ordering matters only in that minhash rides hashed_shingles. */
+    * round over round. Each entry materializes its memo. A build that
+    * reads another resolves it through the memo whatever the order, so
+    * the order only decides which row pays a shared dependency's cost
+    * (hashed_shingles before minhash_pairs, part_cooccur before
+    * triangles). */
   def sharedBuilds: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "build:hashed_shingles" -> ((s, d) => hashedShinglesCached(s, d)),
     "build:minhash_pairs" -> ((s, d) => minhashPairsCached(s, d)),
@@ -252,19 +237,12 @@ object SparkEntry {
     // q_pq_error
     "build:pq_codebook" -> ((s, d) => pqCodebookCached(s, d)._2))
 
-  /** Release every session-keyed memo in the library (GraphBuilder,
-    * DerivedGraphs, minhash pairs) — for in-process session recycling. */
-  def clearCaches(): Unit = {
-    (mhCache.values ++ triCache.values ++ mediaCache.values.map(_.toDF()) ++
-      dsCache.values.flatMap { case (w, sp) => Seq(w, sp) })
-      .foreach(df => try df.unpersist() catch { case _: Throwable => () })
-    mhCache.clear()
-    triCache.clear()
-    mediaCache.clear()
-    dsCache.clear()
-    GraphBuilder.clearCache()
-    DerivedGraphs.clearCache()
-  }
+  /** Release every shared build the library memoizes — the TPC-H
+    * graph, the derived graphs and the frames above, for every session
+    * and sf dir — by clearing the one registry, [[graft.graph.Memo]]:
+    * persisted frames are unpersisted and the session references
+    * dropped. For in-process session recycling. */
+  def clearCaches(): Unit = Memo.clear()
 
   private val P = GraphBuilder.oraclePreamble
 

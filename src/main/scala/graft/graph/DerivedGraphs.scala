@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.collection.concurrent.TrieMap
 
 /** Derived graphs for the algorithm suite. The raw TPC-H graph is a
   * multipartite DAG (no cycles, no triangles), so cycle/triangle-sensitive
@@ -19,22 +18,12 @@ import scala.collection.concurrent.TrieMap
 object DerivedGraphs {
   import GraphBuilder.{TAG, NationTag, OrderTag, PartTag, table}
 
-  private val cache = TrieMap.empty[(SparkSession, String, String), DataFrame]
-  private def memo(s: SparkSession, d: String, k: String)(f: => DataFrame): DataFrame =
-    cache.getOrElseUpdate((s, d, k), f.persist())
-
-  /** Drop memoized derived graphs (see GraphBuilder.clearCache). */
-  def clearCache(): Unit = {
-    cache.values.foreach(df => try df.unpersist() catch { case _: Throwable => () })
-    cache.clear()
-  }
-
   /** Directed nation "trade" graph: supplier-nation → customer-nation, one
     * candidate edge per (sn, cn) pair, kept when its lineitem count exceeds
     * 1.5× the mean pair count (sparsifies a complete 25×25 graph into one
     * with nontrivial SCC structure at every SF, scale-invariantly). */
   def nationTrade(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "trade") {
+    Memo(s, d, "trade") {
       val li = table(s, d, "lineitem").select("l_suppkey", "l_orderkey")
       val supp = table(s, d, "supplier").select("s_suppkey", "s_nationkey")
       val ord = table(s, d, "orders").select("o_orderkey", "o_custkey")
@@ -50,7 +39,7 @@ object DerivedGraphs {
       val avgCnt = trade.agg(avg(col("cnt")).as("avg_cnt"))
       trade.crossJoin(broadcast(avgCnt))
         .filter(col("cnt") > lit(1.5) * col("avg_cnt"))
-        .select("src", "dst")
+        .select("src", "dst").persist()
     }
 
   /** Denser deterministic variant for the visit-order/path kernels
@@ -62,7 +51,7 @@ object DerivedGraphs {
     * every nation connected outward at every SF. The rank runs over
     * the ≤625-row aggregated pair table. */
   def nationTradeTop(s: SparkSession, d: String, perSrc: Int = 3): DataFrame =
-    memo(s, d, s"tradeTop$perSrc") {
+    Memo(s, d, "tradeTop", perSrc) {
       val li = table(s, d, "lineitem").select("l_suppkey", "l_orderkey")
       val supp = table(s, d, "supplier").select("s_suppkey", "s_nationkey")
       val ord = table(s, d, "orders").select("o_orderkey", "o_custkey")
@@ -79,7 +68,7 @@ object DerivedGraphs {
         .filter(col("src") =!= col("dst"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= perSrc)
-        .select("src", "dst")
+        .select("src", "dst").persist()
     }
 
   /** All 25 nation node ids (trade-graph vertex set — isolated nations
@@ -92,7 +81,7 @@ object DerivedGraphs {
     * pre-threshold pair table the sparsified [[nationTrade]] filters;
     * exposed for weight-aware kernels (weighted PageRank). */
   def nationTradeAll(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "tradeAll") {
+    Memo(s, d, "tradeAll") {
       val li = table(s, d, "lineitem").select("l_suppkey", "l_orderkey")
       val supp = table(s, d, "supplier").select("s_suppkey", "s_nationkey")
       val ord = table(s, d, "orders").select("o_orderkey", "o_custkey")
@@ -103,7 +92,7 @@ object DerivedGraphs {
         .groupBy(
           (lit(NationTag * TAG) + col("s_nationkey")).as("src"),
           (lit(NationTag * TAG) + col("c_nationkey")).as("dst"))
-        .agg(count(lit(1)).as("cnt"))
+        .agg(count(lit(1)).as("cnt")).persist()
     }
 
   /** Undirected WEIGHTED trade graph: one (a < b, w) edge per
@@ -112,7 +101,7 @@ object DerivedGraphs {
     * — one aggregation, no directed intermediate). The spanning-forest
     * testbed: complete-ish, weight-diverse, 25 nodes at every SF. */
   def nationTradeWeighted(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "tradeW") {
+    Memo(s, d, "tradeW") {
       val li = table(s, d, "lineitem").select("l_suppkey", "l_orderkey")
       val supp = table(s, d, "supplier").select("s_suppkey", "s_nationkey")
       val ord = table(s, d, "orders").select("o_orderkey", "o_custkey")
@@ -124,7 +113,7 @@ object DerivedGraphs {
         .join(cust, ord("o_custkey") === cust("c_custkey"))
         .filter(col("s_nationkey") =!= col("c_nationkey"))
         .groupBy(least(sid, cid).as("a"), greatest(sid, cid).as("b"))
-        .agg(count(lit(1)).cast("long").as("w"))
+        .agg(count(lit(1)).cast("long").as("w")).persist()
     }
 
   /** Part co-occurrence multigraph: one (a<b) row per order containing
@@ -137,7 +126,7 @@ object DerivedGraphs {
     * bounded (TPC-H: ≤ 7 lineitems), so the per-order array is tiny;
     * on a skewed real corpus this would need a per-group size cap. */
   def partCooccurAll(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "coAll") {
+    Memo(s, d, "coAll") {
       table(s, d, "lineitem").select("l_orderkey", "l_partkey")
         .groupBy("l_orderkey").agg(collect_list("l_partkey").as("ps"))
         .select(explode(expr(
@@ -148,12 +137,12 @@ object DerivedGraphs {
         .filter(col("p.lo") =!= col("p.hi"))
         .select(
           (lit(PartTag * TAG) + col("p.lo")).as("a"),
-          (lit(PartTag * TAG) + col("p.hi")).as("b"))
+          (lit(PartTag * TAG) + col("p.hi")).as("b")).persist()
     }
 
   /** Simple (deduplicated) co-occurrence graph, oriented a < b. */
   def partCooccur(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "co")(partCooccurAll(s, d).distinct())
+    Memo(s, d, "co")(partCooccurAll(s, d).distinct().persist())
 
   /** Symmetric (both-direction) view of an (a,b) pair table. */
   def sym(pairs: DataFrame): DataFrame =
@@ -170,7 +159,7 @@ object DerivedGraphs {
     * matter the row count. One shuffle for the rank window, one
     * self-join on (custkey, rank) for the ring closure. */
   def orderRing(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "oring") {
+    Memo(s, d, "oring") {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("o_custkey").orderBy(col("o_orderdate"), col("o_orderkey"))
       // rn and the per-customer ring length share one window shuffle
@@ -183,7 +172,7 @@ object DerivedGraphs {
         .join(ranked.select(col("ck"), col("rn").as("rn2"), col("ok").as("dok")),
           Seq("ck", "rn2"))
         .select((lit(OrderTag * TAG) + col("sok")).as("src"),
-          (lit(OrderTag * TAG) + col("dok")).as("dst"))
+          (lit(OrderTag * TAG) + col("dok")).as("dst")).persist()
     }
 
   /** All order node ids (ring-graph vertex set, isolated orders included). */

@@ -77,6 +77,38 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("shared builds: one registry keyed by (session, dir, name, params)") {
+    import graft.graph.{DerivedGraphs, Memo}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.storage.StorageLevel
+    // the same (session, dir, name, params) returns the same frame;
+    // another parameter value is another entry
+    val top3 = DerivedGraphs.nationTradeTop(spark, sfDir)
+    assert(DerivedGraphs.nationTradeTop(spark, sfDir, 3) eq top3)
+    assert(DerivedGraphs.nationTradeTop(spark, sfDir, 2) ne top3)
+    // minhash pairs and triangles share (session, dir) but not an entry
+    val builds = SparkEntry.sharedBuilds.toMap
+    val pairs = builds("build:minhash_pairs")(spark, sfDir)
+    val tri = builds("build:triangles")(spark, sfDir)
+    assert(pairs ne tri)
+    assert(builds("build:minhash_pairs")(spark, sfDir) eq pairs)
+    assert(builds("build:triangles")(spark, sfDir) eq tri)
+    // a body may read another entry, which is registered on the way
+    val outer = Memo(spark, sfDir, "spec_outer")(
+      Memo(spark, sfDir, "spec_inner")(spark.range(3).toDF("id").persist())
+        .filter(col("id") > 0).persist())
+    val inner = Memo[DataFrame](spark, sfDir, "spec_inner")(fail("inner entry missing"))
+    assert(outer.count() == 2 && inner.count() == 3)
+    // clearCaches releases every entry, and the next call rebuilds
+    val graph = GraphBuilder.tpch(spark, sfDir)
+    assert(tri.storageLevel != StorageLevel.NONE)
+    SparkEntry.clearCaches()
+    for (df <- Seq(top3, tri, inner, outer, graph.nodes, graph.edges))
+      assert(df.storageLevel == StorageLevel.NONE)
+    assert(GraphBuilder.tpch(spark, sfDir) ne graph)
+    assert(DerivedGraphs.nationTradeTop(spark, sfDir) ne top3)
+  }
+
   test("column pruning: two-column projection reads a two-column schema") {
     val plan = planOf(GraphBuilder.table(spark, sfDir, "lineitem")
       .select("l_orderkey", "l_quantity"))
@@ -479,5 +511,19 @@ class PlanSpec extends SparkSpec {
     val readers = files.filter(p => code(p).contains("broadcastThreshold"))
       .map(_.getFileName.toString)
     assert(readers == List("Tuning.scala"), readers)
+  }
+
+  test("source audit: no TrieMap outside Memo.scala and the constraint store") {
+    // Every shared build goes through graft.graph.Memo, whose clear()
+    // is the one release; Constraints' map is a constraint store.
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    assert(files.size > 20, s"source tree not found from ${new java.io.File(".").getAbsolutePath}")
+    def code(p: java.nio.file.Path): String = java.nio.file.Files.readString(p)
+      .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    val users = files.filter(p => code(p).contains("TrieMap"))
+      .map(_.getFileName.toString).sorted
+    assert(users == List("Constraints.scala", "Memo.scala"), users)
   }
 }
