@@ -606,8 +606,11 @@ object Dedup {
     val tilings = bandings.zipWithIndex
       .map { case ((b, r), ti) => (ti.toLong, b.toLong, r.toLong) }
       .toDF("ti", "bands", "rows_per_band")
-    // left join: a tiling with zero candidates still emits its row
-    broadcast(tilings).join(perTi, Seq("ti"), "left_outer")
+    // left join: a tiling with zero candidates still emits its row. The
+    // hint goes on the non-preserved side (one row per tiling): Spark
+    // cannot build the preserved side of an outer join and drops a hint
+    // placed there, with a warning
+    tilings.join(broadcast(perTi), Seq("ti"), "left_outer")
       .crossJoin(broadcast(nTruth))
       .select(col("bands"), col("rows_per_band"),
         coalesce(col("cand"), lit(0L)).as("candidates"),

@@ -526,4 +526,45 @@ class PlanSpec extends SparkSpec {
       .map(_.getFileName.toString).sorted
     assert(users == List("Constraints.scala", "Memo.scala"), users)
   }
+
+  test("source audit: every graph a Cypher write returns goes through the patch fold") {
+    // Mutations' kernels build their edited graph inside an Edit, and only
+    // Patch.fold turns an Edit into the graph `mutate` returns: a write
+    // session holds a base plus a patch and never stacks plans.
+    def code(p: String): String = java.nio.file.Files.readString(java.nio.file.Paths.get(p))
+      .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    val src = code("src/main/scala/graft/cypher/Mutations.scala")
+    def body(name: String): (Int, Int) = {
+      val at = src.indexOf(s"def $name(")
+      // up to the next member of the object
+      (at, Seq("\n  def ", "\n  private ", "\n  final ", "\n  /**", "\n}")
+        .map(src.indexOf(_, at + 1)).filter(_ > 0).min)
+    }
+    def text(name: String): String = { val (a, b) = body(name); src.substring(a, b) }
+    // `stacked`, the unfolded reference the fold is checked against, is
+    // the one graph built outside an Edit
+    val (sa, sb) = body("stacked")
+    val built = "PropertyGraph\\(".r.findAllMatchIn(src).map(_.start)
+      .filterNot(i => i > sa && i < sb).toList
+    assert(built.nonEmpty)
+    built.foreach { i =>
+      assert(src.substring(0, i).endsWith("Edit("), src.substring(math.max(0, i - 60), i + 40))
+    }
+    assert(!src.contains(".copy("))
+    val returning = "(?s)def (\\w+)\\([^=]*?\\): PropertyGraph =".r
+      .findAllMatchIn(src).map(_.group(1)).toList.sorted
+    assert(returning == List("apply", "applyChecked", "mutate", "stacked"), returning)
+    assert(text("mutate").contains("Patch.fold("))
+    assert(Seq("apply", "applyChecked").forall(text(_).contains("mutate(")))
+  }
+
+  test("source audit: the checkpoint-stats shim is the only main source under org.apache.spark.sql") {
+    // Spark-internal access (LogicalRDD's statistics) stays in one file,
+    // reached through graft.algorithms.Probe.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/org")
+    val files = java.nio.file.Files.walk(root).iterator.asScala
+      .filter(java.nio.file.Files.isRegularFile(_)).map(_.toString).toList
+    assert(files == List("src/main/scala/org/apache/spark/sql/graftshim/CheckpointStats.scala"), files)
+  }
 }
