@@ -48,9 +48,9 @@ object Probe {
   /** [[checkpointCounted]] whose result carries honest statistics: the
     * observed row count times the row width, and no constraints carried
     * over from the origin plan. A frame re-checkpointed over its own
-    * previous checkpoint (the write patch of a
-    * [[graft.graph.PropertyGraph]]) otherwise inherits a size estimate
-    * that grows on every round and stops it broadcasting. */
+    * previous checkpoint (a table of a graph written through
+    * graft.cypher.Mutations) otherwise inherits a size estimate that
+    * grows on every round and stops it broadcasting. */
   def checkpointSized(df: DataFrame): (DataFrame, Long) = {
     val (out, n) = checkpointCounted(df)
     (org.apache.spark.sql.graftshim.CheckpointStats.withRowCount(out, n), n)

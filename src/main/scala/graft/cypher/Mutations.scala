@@ -1,33 +1,25 @@
 package graft.cypher
 
-import graft.graph.{Patch, PropertyGraph}
+import graft.algorithms.Probe
+import graft.graph.PropertyGraph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import Ast._
 
 /** Cypher mutation statements compiled to DataFrame edits of the node/edge
   * tables (reference: src/cypher/ast.rs:150-199 + executor.rs mutation
-  * paths; the reference mutates its store in place).
+  * paths; the reference mutates its store in place — here each statement
+  * returns a new immutable PropertyGraph, the Spark-native equivalent of
+  * an append/overwrite of the backing table).
   *
-  * Here each statement returns a new immutable PropertyGraph held as a
-  * base plus one small checkpointed patch per table ([[Patch]]), so a
-  * long write session does not stack plans. Every statement runs in two
-  * steps:
-  *  - its kernel computes the edited graph G' one level over the current
-  *    view, as a plain DataFrame edit, and marks what it touched: the
-  *    rows it created or changed carry the flag column [[Patch.Touched]]
-  *    (CREATE the new nodes and edges, SET the matched nodes or the
-  *    matched pairs' edges, FOREACH the listed ids), and the keys of rows
-  *    it removed are reported beside G' (DELETE the ids and their
-  *    incident triples, or the matched triples; a SET of a key column
-  *    the rows' old keys);
-  *  - one fold ([[Patch.fold]]) puts the flagged rows and tombstones for
-  *    the removed keys in place of the patch rows with those keys and
-  *    checkpoints the patch; a patch that outgrows the regime gate is
-  *    compacted into a new base.
-  * Edge patches are keyed by the (src, dst, rel_type) triple: every rel
-  * SET or DELETE, and every CREATE, affects all edges that share a
-  * triple, so multi-edges keep their multiplicity.
+  * Every statement runs in two steps. Its kernel computes the edited
+  * graph one level over the current frames ([[stacked]]); then [[mutate]]
+  * checkpoints each table the statement wrote, so the returned graph's
+  * written frames are checkpoint leaves and a long write session does not
+  * stack one statement's plan on the next. The cost is one checkpoint
+  * action per written table, proportional to the table: a store that
+  * takes large writes into large tables would keep a small delta over a
+  * base instead.
   *
   * Surface: CREATE (standalone and MATCH…CREATE between matched nodes),
   * MERGE with ON CREATE SET / ON MATCH SET, SET and DELETE on node *and*
@@ -83,39 +75,25 @@ object Mutations {
     out
   }
 
+  /** `stmt` applied to `graph`, each table it wrote checkpointed (a
+    * table a kernel leaves alone is the same frame, and stays as it is).
+    * The checkpoint is coalesced to `spark.sql.shuffle.partitions`: a
+    * CREATE unions its new rows' partitions onto the table, so without
+    * it the partition count grows with every write. It carries honest
+    * statistics ([[Probe.checkpointSized]]); a frame re-checkpointed over
+    * its own previous checkpoint otherwise inherits a size estimate that
+    * grows on every write until the table stops broadcasting. */
   def mutate(graph: PropertyGraph, stmt: Statement): PropertyGraph = {
-    val e = edit(graph, stmt)
-    Patch.fold(graph, e.graph, e.removedNodes, e.removedEdges)
+    val next = stacked(graph, stmt)
+    val bound = graph.nodes.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    def written(before: DataFrame, after: DataFrame) =
+      if (after eq before) before else Probe.checkpointSized(after.coalesce(bound))._1
+    PropertyGraph(written(graph.nodes, next.nodes), written(graph.edges, next.edges))
   }
 
   /** The statement's edited graph stacked one level over `graph`'s
-    * frames, not folded: the reference the fold is checked against. */
-  private[graft] def stacked(graph: PropertyGraph, stmt: Statement): PropertyGraph = {
-    val g = edit(graph, stmt).graph
-    PropertyGraph(g.nodes.drop(Patch.Touched), g.edges.drop(Patch.Touched))
-  }
-
-  /** A kernel's result: the edited graph, one level over the graph it
-    * read, whose created or changed rows carry [[Patch.Touched]] (a table
-    * without the column is unchanged), and per table the keys of rows the
-    * statement removed (extra keys are harmless). */
-  private final case class Edit(graph: PropertyGraph, removedNodes: Option[DataFrame],
-                                removedEdges: Option[DataFrame]) {
-    /** This edit followed by `next`, computed over this edit's graph. */
-    def andThen(next: Edit): Edit = Edit(next.graph,
-      union(removedNodes ++ next.removedNodes), union(removedEdges ++ next.removedEdges))
-  }
-
-  private def union(frames: Iterable[DataFrame]): Option[DataFrame] =
-    frames.reduceOption(_ unionByName _)
-
-  private def edgeKey(df: DataFrame): DataFrame = df.select(Patch.EdgeKey.map(col): _*)
-
-  /** `df` with its [[Patch.Touched]] flag or-ed with `cond`. */
-  private def touch(df: DataFrame, cond: Column): DataFrame = df.withColumn(Patch.Touched,
-    if (df.columns.contains(Patch.Touched)) col(Patch.Touched) || cond else cond)
-
-  private def edit(graph: PropertyGraph, stmt: Statement): Edit = stmt match {
+    * frames, not checkpointed. */
+  private[graft] def stacked(graph: PropertyGraph, stmt: Statement): PropertyGraph = stmt match {
     case Create(pat, matches)   => create(graph, pat, matches)
     case Merge(pat, onC, onM)   => merge(graph, pat, onC, onM)
     case SetStmt(m, as)         => setProps(graph, m, as)
@@ -171,7 +149,7 @@ object Mutations {
   }
 
   private def create(graph: PropertyGraph, pat: Pattern,
-                     matches: List[MatchClause]): Edit = {
+                     matches: List[MatchClause]): PropertyGraph = {
     val chain = pat.start :: pat.steps.map(_._2)
     val ctx =
       if (matches.isEmpty) null
@@ -184,12 +162,10 @@ object Mutations {
     // (MERGE relies on this when only the relationship is missing).
     val newNodes = chain.filter(np => !isBound(np) && np.label.isDefined)
       .map(nodeRow(graph, _))
-    val nodes =
-      if (newNodes.isEmpty) graph.nodes
-      else touch(graph.nodes, lit(false)).unionByName(touch(
-        PropertyGraph.dedupById(newNodes.reduce(_ unionByName _))
-          .join(graph.nodes.select("id"), Seq("id"), "left_anti")
-          .select(graph.nodes.columns.map(col).toIndexedSeq: _*), lit(true)))
+    val nodes = append(graph.nodes, Option.when(newNodes.nonEmpty)(
+      PropertyGraph.dedupById(newNodes.reduce(_ unionByName _))
+        .join(graph.nodes.select("id"), Seq("id"), "left_anti")
+        .select(graph.nodes.columns.map(col).toIndexedSeq: _*)).toList)
     // Edges: endpoint = bound variable column (one edge per match row) or
     // literal id; unmatched-side endpoints ride along via crossJoin-free
     // literal columns.
@@ -206,28 +182,31 @@ object Mutations {
       }
       edgeRows(graph, pairs, rel)
     }
-    val edges =
-      if (newEdges.isEmpty) graph.edges
-      else (touch(graph.edges, lit(false)) :: newEdges.map(touch(_, lit(true))))
-        .reduce(_ unionByName _)
-    Edit(PropertyGraph(nodes, edges), None, None)
+    PropertyGraph(nodes, append(graph.edges, newEdges))
   }
+
+  /** `table` with `rows` appended. `unionByName` flattens a union it is
+    * given into its own, and a persisted table that is a union (the
+    * built graph's node table) then no longer matches the cache and is
+    * recomputed from its sources; the projection keeps it whole. */
+  private def append(table: DataFrame, rows: List[DataFrame]): DataFrame =
+    if (rows.isEmpty) table
+    else (table.select(table.columns.map(col).toIndexedSeq: _*) :: rows).reduce(_ unionByName _)
 
   /** MERGE: create the pattern only when no match exists; then apply the
     * ON CREATE SET / ON MATCH SET hooks to the (created or matched)
     * pattern (executor.rs merge path, ast.rs:185). */
   private def merge(graph: PropertyGraph, pat: Pattern,
                     onCreate: List[(String, String, Literal)],
-                    onMatch: List[(String, String, Literal)]): Edit = {
+                    onMatch: List[(String, String, Literal)]): PropertyGraph = {
     val exists = !new Compiler(graph).patternCtx(pat).df.isEmpty
     if (exists) {
-      if (onMatch.isEmpty) Edit(graph, None, None)
+      if (onMatch.isEmpty) graph
       else setProps(graph, MatchClause(pat, optional = false, None), onMatch)
     } else {
       val created = create(graph, pat, Nil)
       if (onCreate.isEmpty) created
-      else created.andThen(
-        setProps(created.graph, MatchClause(pat, optional = false, None), onCreate))
+      else setProps(created, MatchClause(pat, optional = false, None), onCreate)
     }
   }
 
@@ -249,30 +228,25 @@ object Mutations {
     }.toMap
   }
 
-  /** SET on node and rel variables. The matched rows are touched; an
-    * assignment to a key column (id, src, dst, rel_type) also removes
-    * their old keys. */
   private def setProps(graph: PropertyGraph, m: MatchClause,
-                       assigns: List[(String, String, Literal)]): Edit = {
+                       assigns: List[(String, String, Literal)]): PropertyGraph = {
     val ctx = new Compiler(graph).patternFiltered(m)
     val rels = relVarEndpoints(m.pattern)
     val (relAssigns, nodeAssigns) = assigns.partition(a => rels.contains(a._1))
     var nodes = graph.nodes
-    var removedNodes = List.empty[DataFrame]
     nodeAssigns.groupBy(_._1).foreach { case (v, as) =>
       require(ctx.df.columns.contains(v), s"SET variable '$v' not bound")
       val ids = ctx.df.select(col(v).as("id")).distinct()
-      if (as.exists(_._2 == "id")) removedNodes ::= ids
-      var df = nodes.join(ids.withColumn("_upd", lit(true)), Seq("id"), "left_outer")
+        .withColumn("_upd", lit(true))
+      var df = nodes.join(ids, Seq("id"), "left_outer")
       as.foreach { case (_, p, value) =>
         df = df.withColumn(p,
           when(col("_upd"), litCol(value).cast(nodes.schema(p).dataType))
             .otherwise(col(p)))
       }
-      nodes = touch(df, coalesce(col("_upd"), lit(false))).drop("_upd")
+      nodes = df.drop("_upd")
     }
     var edges = graph.edges
-    var removedEdges = List.empty[DataFrame]
     relAssigns.groupBy(_._1).foreach { case (rv, as) =>
       val (sv, dv, rel) = rels(rv)
       require(ctx.df.columns.contains(sv) && ctx.df.columns.contains(dv),
@@ -282,33 +256,28 @@ object Mutations {
       val typeOk =
         if (rel.relTypes.isEmpty) lit(true)
         else col("rel_type").isin(rel.relTypes: _*)
-      // the rows the assignments below change (a row whose rel_type an
-      // earlier assignment changes was matched already)
       var df = edges.join(pairs,
-          edges("src") === col("_ms") && edges("dst") === col("_md"), "left_outer")
-        .withColumn("_hit", coalesce(col("_upd") && typeOk, lit(false)))
-      if (as.exists(a => Patch.EdgeKey.contains(a._2)))
-        removedEdges ::= edgeKey(df.filter(col("_hit")))
+        edges("src") === col("_ms") && edges("dst") === col("_md"), "left_outer")
       as.foreach { case (_, p, value) =>
         df = df.withColumn(p,
           when(col("_upd") && typeOk, litCol(value).cast(edges.schema(p).dataType))
             .otherwise(col(p)))
       }
-      edges = touch(df, col("_hit")).drop("_upd", "_ms", "_md", "_hit")
+      edges = df.drop("_upd", "_ms", "_md")
+        .select(graph.edges.columns.map(col).toIndexedSeq: _*)
     }
-    Edit(PropertyGraph(nodes, edges), union(removedNodes), union(removedEdges))
+    PropertyGraph(nodes, edges)
   }
 
   /** DELETE v: node variables remove matched nodes and their incident
     * edges (the reference's DETACH-style delete, executor.rs delete
     * path); rel variables remove only the matched relationships. */
   private def delete(graph: PropertyGraph, m: MatchClause,
-                     vars: List[String]): Edit = {
+                     vars: List[String]): PropertyGraph = {
     val ctx = new Compiler(graph).patternFiltered(m)
     val rels = relVarEndpoints(m.pattern)
     val (relVars, nodeVars) = vars.partition(rels.contains)
     var edges = graph.edges
-    var removedEdges = List.empty[DataFrame]
     relVars.foreach { rv =>
       val (sv, dv, rel) = rels(rv)
       require(ctx.df.columns.contains(sv) && ctx.df.columns.contains(dv),
@@ -318,53 +287,42 @@ object Mutations {
       val typeOk =
         if (rel.relTypes.isEmpty) lit(true)
         else col("rel_type").isin(rel.relTypes: _*)
-      val marked = edges.join(pairs,
+      edges = edges.join(pairs,
           edges("src") === col("_ms") && edges("dst") === col("_md"), "left_outer")
-        .withColumn("_hit", coalesce(col("_del"), lit(false)) && typeOk)
-      removedEdges ::= edgeKey(marked.filter(col("_hit")))
-      edges = marked.filter(!col("_hit"))
+        .filter(!(coalesce(col("_del"), lit(false)) && typeOk))
         .select(graph.edges.columns.map(col).toIndexedSeq: _*)
     }
     var nodes = graph.nodes
-    var removedNodes: Option[DataFrame] = None
     if (nodeVars.nonEmpty) {
       val ids = nodeVars.map { v =>
         require(ctx.df.columns.contains(v), s"DELETE variable '$v' not bound")
         ctx.df.select(col(v).as("id"))
       }.reduce(_ unionByName _).distinct()
-      removedNodes = Some(ids)
-      removedEdges ::= edgeKey(graph.edges
-        .join(ids.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-        .unionByName(graph.edges
-          .join(ids.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")))
       nodes = nodes.join(ids, Seq("id"), "left_anti")
       edges = edges
         .join(ids.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
         .join(ids.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
         .select(graph.edges.columns.map(col).toIndexedSeq: _*)
     }
-    Edit(PropertyGraph(nodes, edges), removedNodes, union(removedEdges))
+    PropertyGraph(nodes, edges)
   }
 
   /** FOREACH (v IN [ids] | SET v.p = lit, …): batch node-property update
     * keyed by literal ids (foreach_test.rs contract: ids that match no
     * stored node are skipped silently). */
   private def foreach(graph: PropertyGraph, list: List[Literal],
-                      assigns: List[(String, String, Literal)]): Edit = {
-    if (list.isEmpty) return Edit(graph, None, None)
+                      assigns: List[(String, String, Literal)]): PropertyGraph = {
+    if (list.isEmpty) return graph
     val ids = list.map {
       case IntLit(v) => v
       case l => throw new IllegalArgumentException(s"FOREACH list must hold node ids, got $l")
     }
     val cond = col("id").isin(ids: _*)
-    var nodes = touch(graph.nodes, cond)
+    var nodes = graph.nodes
     assigns.foreach { case (_, p, value) =>
       nodes = nodes.withColumn(p,
         when(cond, litCol(value).cast(nodes.schema(p).dataType)).otherwise(col(p)))
     }
-    // an assignment to id moves the listed rows off their old keys
-    val moved =
-      if (assigns.exists(_._2 == "id")) Some(graph.nodes.select("id").filter(cond)) else None
-    Edit(PropertyGraph(nodes, graph.edges), moved, None)
+    PropertyGraph(nodes, graph.edges)
   }
 }

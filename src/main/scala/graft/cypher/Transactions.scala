@@ -11,15 +11,14 @@ import Ast._
   *
   * The reference mutates a single-node store under a lock-managed
   * transaction log. The Spark-native equivalent needs neither lock nor
-  * log: every [[Mutations]] statement returns a NEW immutable
-  * [[PropertyGraph]] — the same base plus a new checkpointed patch per
-  * touched table (the old patch checkpoints stay as they were) — so a
-  * transaction is just references, one graph per nesting level.
-  * BEGIN snapshots by keeping the current graph's reference (free, no
-  * copy), statements inside the transaction fold onto a working graph
-  * nobody else sees, COMMIT publishes the working graph as the
-  * committed state, ROLLBACK drops it together with every patch row it
-  * staged. Readers of [[graph]] always see the last committed state —
+  * log: every [[Mutations]] statement already returns a NEW immutable
+  * [[PropertyGraph]] (each table it wrote a new checkpoint; the previous
+  * graph's frames stay as they were), so a transaction is just
+  * references, one graph per nesting level — BEGIN snapshots by keeping
+  * the current graph's reference (free, no copy), statements inside the
+  * transaction stage onto a working graph nobody else sees, COMMIT
+  * publishes the working graph as the committed state, ROLLBACK drops
+  * it. Readers of [[graph]] always see the last committed state —
   * snapshot isolation by construction, the strongest level the
   * reference's isolation.rs aims for.
   *
@@ -28,9 +27,7 @@ import Ast._
   * reference (whose transaction manager happily stacks begins —
   * executor.rs:1690 always opens a fresh one), BEGIN inside a
   * transaction opens a NESTED level: its COMMIT folds into the outer
-  * level (the staged graph already extends the outer level's patch, so
-  * it simply replaces it), its ROLLBACK restores the state at that
-  * BEGIN.
+  * level, its ROLLBACK restores the state at that BEGIN.
   */
 object Transactions {
 

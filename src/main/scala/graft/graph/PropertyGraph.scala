@@ -24,22 +24,11 @@ import org.apache.spark.sql.functions._
   * traversal starts co-located; `in`-traversals use a dst-keyed view.
   *
   * Writes (graft.cypher.Mutations, and through it TxSession) return a
-  * new immutable graph, but not a stack of plans: a written graph is its
-  * base plus one small checkpointed patch per touched table, carried in
-  * the second parameter list ([[Patch]]; the implicit default is
-  * [[Patch.none]], a graph that is its own base). `nodes` and `edges`
-  * are then the views `base ⋉anti patch keys ∪ live patch rows` (node
-  * patches keyed by id, edge patches by the (src, dst, rel_type)
-  * triple), whose plans stay the same size however many writes came
-  * before. Each write folds the rows it touched into the patch with one
-  * checkpoint action per written table; once a patch no longer passes
-  * the regime gate (`Tuning.fits`), it is compacted into a new
-  * checkpointed base. Equality, `copy` and the pattern
-  * `PropertyGraph(n, e)` see the two frames only; `copy` yields an
-  * unwritten graph over them.
+  * new immutable graph whose written tables are checkpointed, so their
+  * plans are leaves however many writes came before; a table a write
+  * leaves alone is the same frame as before.
   */
-final case class PropertyGraph(nodes: DataFrame, edges: DataFrame)(
-    implicit private[graft] val patch: Patch) {
+final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
 
   /** Nodes of one label — column-pruned, filter-pushed scan. */
   def labeled(label: String): DataFrame = nodes.filter(col("label") === label)

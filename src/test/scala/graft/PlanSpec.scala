@@ -527,35 +527,37 @@ class PlanSpec extends SparkSpec {
     assert(users == List("Constraints.scala", "Memo.scala"), users)
   }
 
-  test("source audit: every graph a Cypher write returns goes through the patch fold") {
-    // Mutations' kernels build their edited graph inside an Edit, and only
-    // Patch.fold turns an Edit into the graph `mutate` returns: a write
-    // session holds a base plus a patch and never stacks plans.
-    def code(p: String): String = java.nio.file.Files.readString(java.nio.file.Paths.get(p))
+  test("source audit: every graph a Cypher write returns has its written tables checkpointed") {
+    // Mutations' kernels stack their edit on the current frames; only
+    // `mutate` calls them (through `stacked`) and it checkpoints every
+    // table they wrote, so a write session never stacks plans.
+    import scala.jdk.CollectionConverters._
+    def code(p: java.nio.file.Path): String = java.nio.file.Files.readString(p)
       .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
-    val src = code("src/main/scala/graft/cypher/Mutations.scala")
-    def body(name: String): (Int, Int) = {
+    val path = java.nio.file.Paths.get("src/main/scala/graft/cypher/Mutations.scala")
+    val src = code(path)
+    def body(name: String): String = {
       val at = src.indexOf(s"def $name(")
+      assert(at >= 0, name)
       // up to the next member of the object
-      (at, Seq("\n  def ", "\n  private ", "\n  final ", "\n  /**", "\n}")
+      src.substring(at, Seq("\n  def ", "\n  private ", "\n  final ", "\n}")
         .map(src.indexOf(_, at + 1)).filter(_ > 0).min)
     }
-    def text(name: String): String = { val (a, b) = body(name); src.substring(a, b) }
-    // `stacked`, the unfolded reference the fold is checked against, is
-    // the one graph built outside an Edit
-    val (sa, sb) = body("stacked")
-    val built = "PropertyGraph\\(".r.findAllMatchIn(src).map(_.start)
-      .filterNot(i => i > sa && i < sb).toList
-    assert(built.nonEmpty)
-    built.foreach { i =>
-      assert(src.substring(0, i).endsWith("Edit("), src.substring(math.max(0, i - 60), i + 40))
-    }
-    assert(!src.contains(".copy("))
-    val returning = "(?s)def (\\w+)\\([^=]*?\\): PropertyGraph =".r
+    val public = "(?m)^  def (\\w+)\\([^=]*?\\): PropertyGraph =".r
       .findAllMatchIn(src).map(_.group(1)).toList.sorted
-    assert(returning == List("apply", "applyChecked", "mutate", "stacked"), returning)
-    assert(text("mutate").contains("Patch.fold("))
-    assert(Seq("apply", "applyChecked").forall(text(_).contains("mutate(")))
+    assert(public == List("apply", "applyChecked", "mutate"), public)
+    assert(Seq("apply", "applyChecked").forall(body(_).contains("mutate(")))
+    assert(body("mutate").contains("Probe.checkpointSized("))
+    // the kernels' one entry is `stacked`, called by `mutate` alone
+    val callers = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => "stacked\\(".r.findAllMatchIn(code(p)).map(m => (p, m.start))).toList
+    val inMutate = src.indexOf(body("mutate"))
+    val outside = callers.filterNot { case (p, i) =>
+      p.endsWith(path) && (src.startsWith("def stacked(", i - 4) ||
+        (i > inMutate && i < inMutate + body("mutate").length))
+    }
+    assert(callers.size == 2 && outside.isEmpty, outside)
   }
 
   test("source audit: the checkpoint-stats shim is the only main source under org.apache.spark.sql") {
