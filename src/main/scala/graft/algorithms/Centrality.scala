@@ -152,22 +152,17 @@ object Centrality {
   private def brandesLocal(idsCk: DataFrame, e: DataFrame, sources: DataFrame,
                            scale: Double, maxDepth: Int, n: Double): DataFrame = {
     val spark = idsCk.sparkSession
-    val Array(idArr) = LocalGraph.packed(idsCk.select(col("id").cast("long")), 1)
+    val g = LocalGraph.load(Some(idsCk), e, LocalGraph.Extend)
     val Array(srcArr) = LocalGraph.packed(sources.select(col("id").cast("long")), 1)
-    val Array(srcL, dstL) = LocalGraph.packed(
-      e.select(col("src").cast("long"), col("dst").cast("long")), 2)
-    val idx = new LocalGraph.Index(idArr.length + srcL.length)
-    idArr.foreach(idx.ix)
-    val srcIx = srcL.map(idx.ix); val dstIx = dstL.map(idx.ix)
-    val u = idx.size
-    val (off, nbr) = LocalGraph.csr(srcIx, dstIx, u)
+    val u = g.n
+    val (off, nbr) = g.csr
     val bc = new Array[Double](u)
     val dist = Array.fill(u)(-1)
     val sigma = new Array[Double](u)
     val delta = new Array[Double](u)
     val order = new Array[Int](u)
     srcArr.foreach { sid =>
-      val s = idx.get(sid)
+      val s = g.ix(sid)
       if (s >= 0) {
         java.util.Arrays.fill(dist, -1)
         var len = 0
@@ -208,10 +203,7 @@ object Centrality {
     }
     val norm = (n - 1.0) * (n - 2.0)
     import spark.implicits._
-    idArr.toSeq.map { id =>
-      val v = idx.get(id)
-      (id, scale * bc(v) / norm)
-    }.toDF("id", "bc")
+    g.ids.toSeq.map(id => (id, scale * bc(g.ix(id)) / norm)).toDF("id", "bc")
   }
 
   /** Closeness + harmonic centrality by multi-source level-synchronous
@@ -313,48 +305,54 @@ object Centrality {
       .orderBy("id")
   }
 
-  /** Driver-gated eccentricity twin over the packed CSR. */
+  /** Driver-gated eccentricity twin: the last node a BFS reaches is
+    * the farthest. */
   private def eccLocal(idsCk: DataFrame, e: DataFrame,
                        sources: DataFrame, maxDepth: Int): DataFrame = {
     val spark = idsCk.sparkSession
-    val Array(idArr) = LocalGraph.packed(idsCk.select(col("id").cast("long")), 1)
-    val Array(srcArr) = LocalGraph.packed(sources.select(col("id").cast("long")), 1)
-    val Array(srcL, dstL) = LocalGraph.packed(
-      e.select(col("src").cast("long"), col("dst").cast("long")), 2)
-    val idx = new LocalGraph.Index(idArr.length + srcL.length)
-    idArr.foreach(idx.ix)
-    val srcIx = srcL.map(idx.ix); val dstIx = dstL.map(idx.ix)
-    val u = idx.size
-    val (off, nbr) = LocalGraph.csr(srcIx, dstIx, u)
-    val dist = new Array[Int](u)
-    val queue = new Array[Int](u)
     import spark.implicits._
+    bfsFromEachLocal(idsCk, e, sources, maxDepth) { (sid, dist, order, r) =>
+      (sid, if (r == 0) 0L else dist(order(r)).toLong, r.toLong)
+    }.sortBy(_._1).toDF("id", "ecc", "n_reach")
+  }
+
+  /** Per-source depth-capped BFS over the driver CSR — the twin of
+    * [[bfsLevelFrames]] that [[closenessLocal]] and [[eccLocal]] share.
+    * For each source id `sid`, `row(sid, dist, order, r)` sees the `r`
+    * nodes it reaches as `order(1 to r)` in BFS order, `dist` hops
+    * away; a source outside the graph reaches nothing. */
+  private def bfsFromEachLocal[R](idsCk: DataFrame, e: DataFrame,
+                                  sources: DataFrame, maxDepth: Int)(
+      row: (Long, Array[Int], Array[Int], Int) => R): Seq[R] = {
+    val g = LocalGraph.load(Some(idsCk), e, LocalGraph.Extend)
+    val Array(srcArr) = LocalGraph.packed(sources.select(col("id").cast("long")), 1)
+    val (off, nbr) = g.csr
+    val dist = new Array[Int](g.n)
+    val order = new Array[Int](g.n)
     srcArr.toSeq.map { sid =>
-      val s = idx.get(sid)
-      var reach = 0L; var ecc = 0L
+      val s = g.ix(sid)
+      var len = 0
       if (s >= 0) {
         java.util.Arrays.fill(dist, -1)
-        dist(s) = 0; queue(0) = s
-        var head = 0; var len = 1
+        dist(s) = 0; order(0) = s
+        var head = 0; len = 1
         while (head < len) {
-          val v = queue(head); head += 1
+          val v = order(head); head += 1
           if (dist(v) < maxDepth) {
             var j = off(v)
             while (j < off(v + 1)) {
               val w = nbr(j)
               if (dist(w) < 0) {
                 dist(w) = dist(v) + 1
-                reach += 1L
-                if (dist(w) > ecc) ecc = dist(w).toLong
-                queue(len) = w; len += 1
+                order(len) = w; len += 1
               }
               j += 1
             }
           }
         }
       }
-      (sid, ecc, reach)
-    }.sortBy(_._1).toDF("id", "ecc", "n_reach")
+      row(sid, dist, order, math.max(len - 1, 0))
+    }
   }
 
   /** One-row diameter/radius report derived from [[eccentricity]]:
@@ -392,48 +390,17 @@ object Centrality {
         col("n_isolated"))
   }
 
-  /** Per-source BFS over the packed CSR — the driver-gated twin of the
-    * distributed level loop (depth-capped identically). */
+  /** Driver-gated closeness twin: the reached nodes' hop sums. */
   private def closenessLocal(idsCk: DataFrame, e: DataFrame,
                              sources: DataFrame, maxDepth: Int): DataFrame = {
     val spark = idsCk.sparkSession
-    val Array(idArr) = LocalGraph.packed(idsCk.select(col("id").cast("long")), 1)
-    val Array(srcArr) = LocalGraph.packed(sources.select(col("id").cast("long")), 1)
-    val Array(srcL, dstL) = LocalGraph.packed(
-      e.select(col("src").cast("long"), col("dst").cast("long")), 2)
-    val idx = new LocalGraph.Index(idArr.length + srcL.length)
-    idArr.foreach(idx.ix)
-    val srcIx = srcL.map(idx.ix); val dstIx = dstL.map(idx.ix)
-    val u = idx.size
-    val (off, nbr) = LocalGraph.csr(srcIx, dstIx, u)
-    val dist = new Array[Int](u)
-    val queue = new Array[Int](u)
     import spark.implicits._
-    srcArr.toSeq.map { sid =>
-      val s = idx.get(sid)
-      var reach = 0L; var sd = 0L; var h = 0.0
-      if (s >= 0) {
-        java.util.Arrays.fill(dist, -1)
-        dist(s) = 0; queue(0) = s
-        var head = 0; var len = 1
-        while (head < len) {
-          val v = queue(head); head += 1
-          if (dist(v) < maxDepth) {
-            var j = off(v)
-            while (j < off(v + 1)) {
-              val w = nbr(j)
-              if (dist(w) < 0) {
-                dist(w) = dist(v) + 1
-                reach += 1L; sd += dist(w); h += 1.0 / dist(w)
-                queue(len) = w; len += 1
-              }
-              j += 1
-            }
-          }
-        }
-      }
-      val cl = if (sd == 0L) 0.0 else reach.toDouble / sd
-      (sid, reach, math.rint(cl * 1e6) / 1e6, math.rint(h * 1e6) / 1e6)
+    bfsFromEachLocal(idsCk, e, sources, maxDepth) { (sid, dist, order, r) =>
+      var sd = 0L; var h = 0.0
+      var q = 1
+      while (q <= r) { val d = dist(order(q)); sd += d; h += 1.0 / d; q += 1 }
+      val cl = if (sd == 0L) 0.0 else r.toDouble / sd
+      (sid, r.toLong, math.rint(cl * 1e6) / 1e6, math.rint(h * 1e6) / 1e6)
     }.toDF("id", "n_reach", "closeness", "harmonic")
   }
 
@@ -482,17 +449,11 @@ object Centrality {
   private def hitsLocal(idsCk: DataFrame, e: DataFrame, n: Double,
                         iterations: Int): DataFrame = {
     val spark = idsCk.sparkSession
-    val Array(idArr) = LocalGraph.packed(idsCk.select(col("id").cast("long")), 1)
-    val Array(srcL, dstL) = LocalGraph.packed(
-      e.select(col("src").cast("long"), col("dst").cast("long")), 2)
-    val idx = new LocalGraph.Index(idArr.length + srcL.length)
-    idArr.foreach(idx.ix)
-    val srcIx = srcL.map(idx.ix); val dstIx = dstL.map(idx.ix)
-    val u = idx.size
+    val g = LocalGraph.load(Some(idsCk), e, LocalGraph.Extend)
+    val srcIx = g.src; val dstIx = g.dst
+    val u = g.n
     val hub = new Array[Double](u); val auth = new Array[Double](u)
-    java.util.Arrays.fill(hub, 0, u, 0.0)
-    var v = 0
-    while (v < idArr.length) { hub(idx.get(idArr(v))) = 1.0 / n; v += 1 }
+    java.util.Arrays.fill(hub, 0, g.nIds, 1.0 / n)
     val m = srcIx.length
     for (_ <- 1 to iterations) {
       java.util.Arrays.fill(auth, 0.0)
@@ -509,8 +470,8 @@ object Centrality {
       if (tot > 0.0) { i = 0; while (i < u) { hub(i) /= tot; i += 1 } }
     }
     import spark.implicits._
-    idArr.toSeq.map { id =>
-      val i = idx.get(id)
+    g.ids.toSeq.map { id =>
+      val i = g.ix(id)
       (id, math.rint(hub(i) * 1e8) / 1e8, math.rint(auth(i) * 1e8) / 1e8)
     }.toDF("id", "hub", "auth")
   }
@@ -583,16 +544,12 @@ object Centrality {
   private def eigenvectorLocal(idsCk: DataFrame, e: DataFrame, n: Double,
                                iterations: Int): DataFrame = {
     val spark = idsCk.sparkSession
-    val Array(idArr) = LocalGraph.packed(idsCk.select(col("id").cast("long")), 1)
-    val Array(srcL, dstL) = LocalGraph.packed(
-      e.select(col("src").cast("long"), col("dst").cast("long")), 2)
-    val idx = new LocalGraph.Index(idArr.length + srcL.length)
-    idArr.foreach(idx.ix)
-    val srcIx = srcL.map(idx.ix); val dstIx = dstL.map(idx.ix)
-    val u = idx.size
+    val g = LocalGraph.load(Some(idsCk), e, LocalGraph.Extend)
+    val srcIx = g.src; val dstIx = g.dst
+    val u = g.n
     var x = new Array[Double](u)
+    java.util.Arrays.fill(x, 0, g.nIds, 1.0 / n)
     var i = 0
-    while (i < idArr.length) { x(idx.get(idArr(i))) = 1.0 / n; i += 1 }
     val m = srcIx.length
     for (_ <- 1 to iterations) {
       val nx = new Array[Double](u)
@@ -605,36 +562,30 @@ object Centrality {
       if (nrm != 0.0) {
         i = 0
         while (i < u) { nx(i) /= nrm; i += 1 }
-        // mirror the distributed left-join restriction: only universe
-        // ids carry a rank row into the next iteration (edge-only
+        // mirror the distributed left-join restriction: only node ids
+        // carry a rank row into the next iteration (edge-only
         // endpoints contribute to the normalizer, then drop)
-        i = idArr.length
-        while (i < u) { nx(i) = 0.0; i += 1 }
+        java.util.Arrays.fill(nx, g.nIds, u, 0.0)
         x = nx
       }
     }
     import spark.implicits._
-    idArr.toSeq.map(id => (id, math.rint(x(idx.get(id)) * 1e8) / 1e8))
+    g.ids.toSeq.map(id => (id, math.rint(x(g.ix(id)) * 1e8) / 1e8))
       .toDF("id", "eig")
   }
 
   private def katzLocal(idsCk: DataFrame, e: DataFrame, iterations: Int,
                         alpha: Double): DataFrame = {
     val spark = idsCk.sparkSession
-    val Array(idArr) = LocalGraph.packed(idsCk.select(col("id").cast("long")), 1)
-    val Array(srcL, dstL) = LocalGraph.packed(
-      e.select(col("src").cast("long"), col("dst").cast("long")), 2)
-    val idx = new LocalGraph.Index(idArr.length + srcL.length)
-    idArr.foreach(idx.ix)
-    val srcIx = srcL.map(idx.ix); val dstIx = dstL.map(idx.ix)
-    val u = idx.size
-    // Universe ids were interned first, so indices < nUniv are exactly
-    // the node universe. The distributed loop carries x only on universe
-    // ids (idsCk left join each iteration), so edges whose src is an
-    // edge-only endpoint contribute NOTHING there — mirror that here by
-    // guarding the accumulate, or the regimes diverge whenever edges
-    // reference ids outside `nodes` (cf. eigenvectorLocal's zeroing).
-    val nUniv = idArr.length
+    val g = LocalGraph.load(Some(idsCk), e, LocalGraph.Extend)
+    val srcIx = g.src; val dstIx = g.dst
+    val u = g.n
+    // The distributed loop carries x only on node ids (idsCk left join
+    // each iteration), so edges whose src is an edge-only endpoint
+    // contribute NOTHING there — mirror that here by guarding the
+    // accumulate, or the regimes diverge whenever edges reference ids
+    // outside `nodes` (cf. eigenvectorLocal's zeroing).
+    val nUniv = g.nIds
     var x = Array.fill(u)(1.0)
     val m = srcIx.length
     for (_ <- 1 to iterations) {
@@ -649,7 +600,7 @@ object Centrality {
       x = nx
     }
     import spark.implicits._
-    idArr.toSeq.map(id => (id, math.rint(x(idx.get(id)) * 1e8) / 1e8))
+    g.ids.toSeq.map(id => (id, math.rint(x(g.ix(id)) * 1e8) / 1e8))
       .toDF("id", "katz")
   }
 }

@@ -107,7 +107,7 @@ object Community {
   }
 
   /** Exact connected components on the driver: union-find with path
-    * compression over a packed edge collect (the LocalGraph pattern).
+    * compression over the [[LocalGraph]] (edge-only endpoints extend it).
     * Label semantics match the distributed min-label fixpoint exactly:
     * labels originate from the seed node rows only, so an edge-only
     * endpoint relays and receives labels but never contributes its own
@@ -116,14 +116,8 @@ object Community {
     * under the driver-size gate. */
   private def ccLocal(seedIds: DataFrame, e: DataFrame): DataFrame = {
     val spark = seedIds.sparkSession
-    val Array(idArr) = LocalGraph.packed(seedIds.select(col("id").cast("long")), 1)
-    val Array(srcL, dstL) = LocalGraph.packed(
-      e.select(col("src").cast("long"), col("dst").cast("long")), 2)
-    val idx = new LocalGraph.Index(idArr.length + srcL.length)
-    idArr.foreach(idx.ix)
-    val nSeeds = idArr.length
-    val srcIx = srcL.map(idx.ix); val dstIx = dstL.map(idx.ix)
-    val u = idx.size
+    val g = LocalGraph.load(Some(seedIds), e, LocalGraph.Extend)
+    val u = g.n
     val parent = Array.tabulate(u)(identity)
     def find(x0: Int): Int = {
       var x = x0
@@ -131,22 +125,22 @@ object Community {
       x
     }
     var k = 0
-    while (k < srcIx.length) {
-      val a = find(srcIx(k)); val b = find(dstIx(k))
+    while (k < g.src.length) {
+      val a = find(g.src(k)); val b = find(g.dst(k))
       if (a != b) parent(a) = b
       k += 1
     }
     val minSeed = Array.fill(u)(Long.MaxValue)
     var i = 0
-    while (i < nSeeds) {
+    while (i < g.nIds) {
       val r = find(i)
-      if (idArr(i) < minSeed(r)) minSeed(r) = idArr(i)
+      if (g.id(i) < minSeed(r)) minSeed(r) = g.id(i)
       i += 1
     }
     import spark.implicits._
     (0 until u).flatMap { v =>
       val m = minSeed(find(v))
-      if (m == Long.MaxValue) None else Some((idx.id(v), m))
+      if (m == Long.MaxValue) None else Some((g.id(v), m))
     }.toDF("id", "component")
   }
 
@@ -201,13 +195,10 @@ object Community {
     * driver-size gate. */
   private def louvainLocal(e: DataFrame, passes: Int): DataFrame = {
     val spark = e.sparkSession
-    val Array(srcL, dstL) = LocalGraph.packed(
-      e.select(col("src").cast("long"), col("dst").cast("long")), 2)
-    val idx = new LocalGraph.Index(srcL.length)
-    val srcIx = srcL.map(idx.ix); val dstIx = dstL.map(idx.ix)
-    val n = idx.size
-    val (off, nbr) = LocalGraph.csr(srcIx, dstIx, n)
-    var comm: Array[Long] = Array.tabulate(n)(i => idx.id(i))
+    val g = LocalGraph.load(None, e, LocalGraph.Extend)
+    val n = g.n
+    val (off, nbr) = g.csr
+    var comm: Array[Long] = Array.tabulate(n)(g.id)
     var pass = 0
     while (pass < passes) {
       pass += 1
@@ -233,7 +224,7 @@ object Community {
       comm = next
     }
     import spark.implicits._
-    (0 until n).map(v => (idx.id(v), comm(v))).toDF("id", "community")
+    (0 until n).map(v => (g.id(v), comm(v))).toDF("id", "community")
   }
 
   /** Louvain over an explicit node universe: isolated nodes (absent
@@ -549,38 +540,15 @@ object Community {
   /** Exact SCC on the driver: iterative Tarjan over the (already
     * checkpointed) node and edge frames, labels canonicalized to each
     * SCC's minimum member id — the same public contract as the
-    * distributed kernel. Edges are packed into primitive long arrays
-    * per partition on the executors (one collect job, ~16 B/edge on
-    * the driver — the corePeelLocal pattern); nodes absent from every
-    * edge come out as singleton SCCs, and edges with an endpoint
-    * outside `nodes` are ignored (the distributed kernel semi-joins
-    * them away). Only called under the driver-size gate. */
+    * distributed kernel. Nodes absent from every edge come out as
+    * singleton SCCs, and edges with an endpoint outside `nodes` are
+    * dropped by the [[LocalGraph.Within]] rule (the distributed kernel
+    * semi-joins them away). Only called under the driver-size gate. */
   private def sccLocal(nodes: DataFrame, edges: DataFrame): DataFrame = {
     val spark = nodes.sparkSession
-    val Array(idArr) = LocalGraph.packed(nodes.select(col("id").cast("long")), 1)
-    val n = idArr.length
-    val idx = new LocalGraph.Index(n)
-    var i = 0
-    while (i < n) { idx.ix(idArr(i)); i += 1 }
-    val Array(srcL, dstL) = LocalGraph.packed(
-      edges.select(col("src").cast("long"), col("dst").cast("long")), 2)
-    // CSR over known endpoints only
-    val deg = new Array[Int](n)
-    var k = 0
-    while (k < srcL.length) {
-      val s = idx.get(srcL(k)); val d = idx.get(dstL(k))
-      if (s >= 0 && d >= 0) deg(s) += 1
-      k += 1
-    }
-    val off = new Array[Int](n + 1)
-    i = 0; while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-    val cur = off.clone(); val nbr = new Array[Int](off(n))
-    k = 0
-    while (k < srcL.length) {
-      val s = idx.get(srcL(k)); val d = idx.get(dstL(k))
-      if (s >= 0 && d >= 0) { nbr(cur(s)) = d; cur(s) += 1 }
-      k += 1
-    }
+    val g = LocalGraph.load(Some(nodes), edges, LocalGraph.Within)
+    val n = g.n
+    val (off, nbr) = g.csr
     // Iterative Tarjan (explicit DFS stack — recursion would overflow
     // on long condensation chains)
     val index = Array.fill(n)(-1); val low = new Array[Int](n)
@@ -624,13 +592,13 @@ object Community {
     }
     // public labels: minimum member id per SCC
     val minId = Array.fill(nComp)(Long.MaxValue)
-    i = 0
+    var i = 0
     while (i < n) {
-      if (idArr(i) < minId(comp(i))) minId(comp(i)) = idArr(i)
+      if (g.id(i) < minId(comp(i))) minId(comp(i)) = g.id(i)
       i += 1
     }
     import spark.implicits._
-    (0 until n).map(i => (idArr(i), minId(comp(i)))).toDF("id", "scc_id")
+    (0 until n).map(i => (g.id(i), minId(comp(i)))).toDF("id", "scc_id")
   }
 
   /** PageRank mirroring the reference exactly (pagerank.rs:9):
@@ -796,26 +764,20 @@ object Community {
   }
 
   /** [[rankFixpoint]] on the driver: the same formula, presence rule
-    * and final normalization over packed primitive arrays (one collect
-    * job for the ids, one for the (src, dst[, w]) edges); only called
-    * under the gate. */
+    * and final normalization over the [[LocalGraph]] of (src, dst[, w]);
+    * only called under the gate. */
   private def rankFixpointLocal(ids: DataFrame, edges: DataFrame,
                                 weight: Option[Column],
                                 sources: Option[Seq[Long]], n: Double,
                                 damping: Double, iterations: Int): DataFrame = {
     val spark = ids.sparkSession
-    val Array(idArr) = LocalGraph.packed(ids.select(col("id").cast("long")), 1)
-    val (Array(srcL, dstL), ws) = LocalGraph.packedLD(edges.select(
-      Seq(col("src").cast("long"), col("dst").cast("long")) ++ weight: _*),
-      2, weight.size)
-    val wArr = ws.headOption.getOrElse(Array.fill(srcL.length)(1.0))
+    val g = LocalGraph.load(Some(ids),
+      edges.select(Seq(col("src"), col("dst")) ++ weight: _*), LocalGraph.Extend)
+    val srcIx = g.src; val dstIx = g.dst
+    val wArr = g.doubles.headOption.getOrElse(Array.fill(srcIx.length)(1.0))
     require(wArr.forall(_ > 0), NonPositiveWeight)
-    // compact universe: node ids first, then any edge endpoint beyond them
-    val idx = new LocalGraph.Index(idArr.length + srcL.length)
-    idArr.foreach(idx.ix)
-    val nIds = idx.size
-    val srcIx = srcL.map(idx.ix); val dstIx = dstL.map(idx.ix)
-    val u = idx.size
+    val nIds = g.nIds
+    val u = g.n
     val wsum = new Array[Double](u)
     var k = 0
     while (k < srcIx.length) { wsum(srcIx(k)) += wArr(k); k += 1 }
@@ -830,7 +792,7 @@ object Community {
       case Some(srcs) =>
         val s = srcs.size.toDouble
         srcs.foreach { v =>
-          val i = idx.get(v)
+          val i = g.ix(v)
           if (i >= 0 && i < nIds) {
             tele(i) = (1.0 - damping) / s; rank(i) = 1.0 / s; inRank(i) = true
           }
@@ -866,7 +828,7 @@ object Community {
     while (i < u) { if (inRank(i)) total += rank(i); i += 1 }
     import spark.implicits._
     (0 until u).filter(inRank(_))
-      .map(i => (idx.id(i), rank(i) / total)).toDF("id", "rank")
+      .map(i => (g.id(i), rank(i) / total)).toDF("id", "rank")
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) with the
@@ -913,16 +875,11 @@ object Community {
   private def lpaLocal(ids: DataFrame, e: DataFrame,
                        iterations: Int): DataFrame = {
     val spark = ids.sparkSession
-    val Array(idArr) = LocalGraph.packed(ids.select(col("id").cast("long")), 1)
-    val Array(srcL, dstL) = LocalGraph.packed(
-      e.select(col("src").cast("long"), col("dst").cast("long")), 2)
-    val idx = new LocalGraph.Index(idArr.length + srcL.length)
-    idArr.foreach(idx.ix)
-    val nIds = idArr.length
-    val srcIx = srcL.map(idx.ix); val dstIx = dstL.map(idx.ix)
-    val u = idx.size
-    val (off, nbr) = LocalGraph.csr(srcIx, dstIx, u)
-    var label = Array.tabulate(u)(i => idx.id(i))
+    val g = LocalGraph.load(Some(ids), e, LocalGraph.Extend)
+    val nIds = g.nIds
+    val u = g.n
+    val (off, nbr) = g.csr
+    var label = Array.tabulate(u)(g.id)
     var it = 0
     while (it < iterations) {
       val next = java.util.Arrays.copyOf(label, u)
@@ -960,7 +917,7 @@ object Community {
       it += 1
     }
     import spark.implicits._
-    (0 until nIds).map(i => (idx.id(i), label(i))).toDF("id", "label")
+    (0 until nIds).map(i => (g.id(i), label(i))).toDF("id", "label")
   }
 
   /** Bond-percolation profile of a weighted graph: connected-component

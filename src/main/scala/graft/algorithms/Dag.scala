@@ -101,22 +101,12 @@ object Dag {
   private def longestPathsLocal(idsCk: DataFrame, e: DataFrame,
                                 maxRounds: Int): DataFrame = {
     val spark = idsCk.sparkSession
-    val Array(idArr) = LocalGraph.packed(idsCk.select(col("id").cast("long")), 1)
     // Edges restricted to the node universe, exactly like the
     // distributed loop (frontier ⊆ universe; non-universe dsts are
     // dropped at the improve join and never propagate).
-    val universe = idArr.toSet
-    val Array(srcL0, dstL0, wL0) = LocalGraph.packed(
-      e.select(col("src").cast("long"), col("dst").cast("long"),
-        col("w").cast("long")), 3)
-    val keep = srcL0.indices.filter(k =>
-      universe.contains(srcL0(k)) && universe.contains(dstL0(k))).toArray
-    val srcL = keep.map(srcL0); val dstL = keep.map(dstL0)
-    val wL = keep.map(wL0)
-    val idx = new LocalGraph.Index(idArr.length + srcL.length)
-    idArr.foreach(idx.ix)
-    val srcIx = srcL.map(idx.ix); val dstIx = dstL.map(idx.ix)
-    val dist = new Array[Long](idx.size)
+    val g = LocalGraph.load(Some(idsCk), e, LocalGraph.Within, longs = 1)
+    val srcIx = g.src; val dstIx = g.dst; val Array(wL) = g.longs
+    val dist = new Array[Long](g.n)
     val m = srcIx.length
     var improved = true
     var round = 0
@@ -134,7 +124,7 @@ object Dag {
       throw new IllegalStateException(
         s"longestPaths did not converge in $maxRounds rounds — input has a cycle")
     import spark.implicits._
-    idArr.toSeq.map(id => (id, dist(idx.get(id)))).toDF("id", "dist")
+    g.ids.toSeq.map(id => (id, dist(g.ix(id)))).toDF("id", "dist")
   }
 
   /** Topological layer per node: longest-path depth under unit weights

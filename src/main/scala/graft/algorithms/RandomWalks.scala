@@ -66,22 +66,16 @@ object RandomWalks {
   private def walksLocal(srcs: DataFrame, e: DataFrame, length: Int,
                          perNode: Int): DataFrame = {
     val spark = srcs.sparkSession
-    val Array(idArr) = LocalGraph.packed(srcs.select(col("id").cast("long")), 1)
-    val Array(srcL, dstL) = LocalGraph.packed(
-      e.select(col("src").cast("long"), col("dst").cast("long")), 2)
-    val idx = new LocalGraph.Index(idArr.length + srcL.length)
-    idArr.foreach(idx.ix)
-    val srcIx = srcL.map(idx.ix); val dstIx = dstL.map(idx.ix)
-    val u = idx.size
-    val (off, nbr) = LocalGraph.csr(srcIx, dstIx, u)
+    val g = LocalGraph.load(Some(srcs), e, LocalGraph.Extend)
+    val (off, nbr) = g.csr
     def h(s: String): Long =
       graft.sql.Hash60.compute(
         org.apache.spark.unsafe.types.UTF8String.fromString(s))
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    idArr.foreach { start =>
+    g.ids.foreach { start =>
       var w = 0
       while (w < perNode) {
-        var cur = idx.get(start)
+        var cur = g.ix(start)
         rows += ((start, w.toLong, 0L, start))
         var t = 1
         var alive = cur >= 0
@@ -90,8 +84,8 @@ object RandomWalks {
           var j = off(cur)
           while (j < off(cur + 1)) {
             val d = nbr(j)
-            val did = idx.id(d)
-            val hv = h(s"rw:$w:$t:${idx.id(cur)}:$did")
+            val did = g.id(d)
+            val hv = h(s"rw:$w:$t:${g.id(cur)}:$did")
             if (hv < bestH || (hv == bestH && did < bestDst)) {
               bestH = hv; best = d; bestDst = did
             }
@@ -100,7 +94,7 @@ object RandomWalks {
           if (best < 0) alive = false // sink: walk stops
           else {
             cur = best
-            rows += ((start, w.toLong, t.toLong, idx.id(cur)))
+            rows += ((start, w.toLong, t.toLong, g.id(cur)))
             t += 1
           }
         }

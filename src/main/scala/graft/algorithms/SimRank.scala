@@ -71,20 +71,17 @@ object SimRank {
   private def simRankLocal(idsCk: DataFrame, e: DataFrame, iters: Int,
                            c: Double): DataFrame = {
     val spark = idsCk.sparkSession
-    val Array(idArr) = LocalGraph.packed(idsCk.select(col("id").cast("long")), 1)
-    val Array(srcL, dstL) = LocalGraph.packed(
-      e.select(col("src").cast("long"), col("dst").cast("long")), 2)
-    val pos = idArr.zipWithIndex.toMap
-    val n = idArr.length
+    val g = LocalGraph.load(Some(idsCk), e, LocalGraph.Extend)
+    val n = g.nIds
     val indegAll = new Array[Long](n)
-    dstL.foreach(d => pos.get(d).foreach(i => indegAll(i) += 1))
     // universe-internal in-neighbor lists
     val inN = Array.fill(n)(List.empty[Int])
     var k = 0
-    while (k < srcL.length) {
-      (pos.get(srcL(k)), pos.get(dstL(k))) match {
-        case (Some(si), Some(di)) => inN(di) = si :: inN(di)
-        case _                    => ()
+    while (k < g.src.length) {
+      val si = g.src(k); val di = g.dst(k)
+      if (di < n) {
+        indegAll(di) += 1
+        if (si < n) inN(di) = si :: inN(di)
       }
       k += 1
     }
@@ -106,7 +103,7 @@ object SimRank {
     }
     import spark.implicits._
     (for (a <- 0 until n; b <- 0 until n)
-      yield (idArr(a), idArr(b), math.rint(s(a)(b) * 1e6) / 1e6))
+      yield (g.id(a), g.id(b), math.rint(s(a)(b) * 1e6) / 1e6))
       .toDF("a", "b", "sim")
   }
 }

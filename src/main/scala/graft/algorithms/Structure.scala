@@ -1178,18 +1178,16 @@ object Structure {
     * like the distributed close. Only called under the driver gate. */
   private def triangleCountsLocal(pe: DataFrame): DataFrame = {
     val spark = pe.sparkSession
-    val Array(aL, bL) = LocalGraph.packed(
-      pe.select(col("a").cast("long"), col("b").cast("long")), 2)
-    val idx = new LocalGraph.Index(aL.length)
-    val aIx = aL.map(idx.ix); val bIx = bL.map(idx.ix)
-    val n = idx.size; val m = aIx.length
+    val g = LocalGraph.load(None, pe, LocalGraph.Extend)
+    val aIx = g.src; val bIx = g.dst
+    val n = g.n; val m = aIx.length
     val deg = new Array[Int](n)
     var k = 0
     while (k < m) { deg(aIx(k)) += 1; deg(bIx(k)) += 1; k += 1 }
     // total order for the orientation: (degree, original id) ascending;
     // rank is the position in that order so list entries sort cheaply
     val order = Array.tabulate(n)(identity).sortWith { (x, y) =>
-      deg(x) < deg(y) || (deg(x) == deg(y) && idx.id(x) < idx.id(y)) }
+      deg(x) < deg(y) || (deg(x) == deg(y) && g.id(x) < g.id(y)) }
     val rankOf = new Array[Int](n)
     var i = 0; while (i < n) { rankOf(order(i)) = i; i += 1 }
     val srcR = new Array[Int](m); val dstR = new Array[Int](m)
@@ -1239,7 +1237,7 @@ object Structure {
     }
     import spark.implicits._
     (0 until n).filter(r => cnt(r) > 0)
-      .map(r => (idx.id(order(r)), cnt(r))).toDF("id", "tri_cnt")
+      .map(r => (g.id(order(r)), cnt(r))).toDF("id", "tri_cnt")
   }
 
   /** Corner-count aggregation for an (x,y,z) triangle frame — split out
@@ -1311,12 +1309,9 @@ object Structure {
     * first scan is O(m). Only called under the driver-size gate. */
   private def kcoreLocal(e: DataFrame, k: Int, rounds: Int): DataFrame = {
     val spark = e.sparkSession
-    val Array(srcL, dstL) = LocalGraph.packed(
-      e.select(col("src").cast("long"), col("dst").cast("long")), 2)
-    val idx = new LocalGraph.Index(srcL.length)
-    val srcIx = srcL.map(idx.ix); val dstIx = dstL.map(idx.ix)
-    val n = idx.size
-    val (off, nbr) = LocalGraph.csr(srcIx, dstIx, n)
+    val g = LocalGraph.load(None, e, LocalGraph.Extend)
+    val n = g.n
+    val (off, nbr) = g.csr
     val deg = Array.tabulate(n)(i => off(i + 1) - off(i))
     val alive = Array.fill(n)(true)
     // only nodes whose degree moved last round can newly fall under k
@@ -1342,7 +1337,7 @@ object Structure {
       }
     }
     import spark.implicits._
-    (0 until n).filter(alive(_)).map(idx.id).toDF("id")
+    (0 until n).filter(alive(_)).map(g.id).toDF("id")
   }
 
   /** Full k-core decomposition: (id, core) with core(v) = the largest k
@@ -1425,60 +1420,25 @@ object Structure {
     c.select(col("id"), col("c").as("core"))
   }
 
-  /** Exact core decomposition on the driver: stream the (already
-    * checkpointed, symmetric) edge list through the driver and run the
+  /** Exact core decomposition on the driver: load the (already
+    * checkpointed, symmetric) edge list as a [[LocalGraph]] and run the
     * Batagelj–Zaversnik O(m) bucket peel — every level of the
     * reference's level-by-level peel (kcore.rs:60) in one pass. Returns
     * (id, core) for every node with ≥ 1 incident edge. Only called
-    * under the driver-size gate.
-    *
-    * The edges are packed into primitive long arrays PER PARTITION on
-    * the executors (one collect job fetching ≤ nPartitions array
-    * pairs), so the driver-heap cost of this regime is ~16 B/edge —
-    * a plain collect() of 4M GenericRows (the gate maximum) would pin
-    * hundreds of MB of Row objects, far above what the same threshold
-    * costs as a broadcast frame (ADVICE r5). (toLocalIterator was
-    * tried first: its one-job-per-partition fetch added ~1.5 s of
-    * scheduler floor at 32 partitions.) */
+    * under the driver-size gate. */
   private def corePeelLocal(e: DataFrame): DataFrame = {
     val spark = e.sparkSession
-    val packed = e.select(col("src").cast("long"), col("dst").cast("long"))
-      .rdd.mapPartitions { it =>
-        val sb = Array.newBuilder[Long]; val db = Array.newBuilder[Long]
-        it.foreach { r => sb += r.getLong(0); db += r.getLong(1) }
-        Iterator.single((sb.result(), db.result()))
-      }.collect()
-    val idOf = new java.util.HashMap[Long, Int]()
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def ix(v: Long): Int = {
-      val got = idOf.getOrDefault(v, -1)
-      if (got >= 0) got
-      else { val i = ids.length; idOf.put(v, i); ids += v; i }
-    }
-    val m = packed.iterator.map(_._1.length).sum
-    val srcIx = new Array[Int](m); val dstIx = new Array[Int](m)
-    var k0 = 0
-    packed.foreach { case (ss, ds) =>
-      var j = 0
-      while (j < ss.length) { srcIx(k0) = ix(ss(j)); dstIx(k0) = ix(ds(j)); j += 1; k0 += 1 }
-    }
-    val n = ids.length
-    val deg = new Array[Int](n)
-    var k = 0
-    while (k < m) { deg(srcIx(k)) += 1; k += 1 }
-    // CSR adjacency over the compacted ids
-    val off = new Array[Int](n + 1)
-    var i = 0; while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-    val cur = off.clone(); val nbr = new Array[Int](m)
-    k = 0; while (k < m) { val s = srcIx(k); nbr(cur(s)) = dstIx(k); cur(s) += 1; k += 1 }
+    val g = LocalGraph.load(None, e, LocalGraph.Extend)
+    val n = g.n
+    val (off, nbr) = g.csr
     // bucket-queue peel: vertices ordered by current degree; removing v
     // pulls each still-higher neighbor one bucket down via a front swap
-    val core = deg.clone()
+    val core = Array.tabulate(n)(i => off(i + 1) - off(i))
     val maxDeg = if (n == 0) 0 else core.max
     val bin = new Array[Int](maxDeg + 2)
     core.foreach(d => bin(d) += 1)
     var startAt = 0
-    i = 0; while (i <= maxDeg) { val c = bin(i); bin(i) = startAt; startAt += c; i += 1 }
+    var i = 0; while (i <= maxDeg) { val c = bin(i); bin(i) = startAt; startAt += c; i += 1 }
     val vert = new Array[Int](n); val pos = new Array[Int](n)
     val fill = bin.clone()
     i = 0; while (i < n) { pos(i) = fill(core(i)); vert(pos(i)) = i; fill(core(i)) += 1; i += 1 }
@@ -1501,7 +1461,7 @@ object Structure {
       p += 1
     }
     import spark.implicits._
-    (0 until n).map(i => (ids(i), core(i).toLong)).toDF("id", "core")
+    (0 until n).map(i => (g.id(i), core(i).toLong)).toDF("id", "core")
   }
 
   /** Degree of each node within the subgraph induced by `members`. */

@@ -305,19 +305,14 @@ object Traversal {
   }
 
   /** Multi-source BFS on the driver: the same level-synchronous
-    * first-visit rule over a packed edge collect. Only called under the
+    * first-visit rule over the [[LocalGraph]] CSR. Only called under the
     * driver-size gate. */
   private def bfsLocal(e: DataFrame, seedIds: DataFrame, maxDepth: Int): DataFrame = {
     val spark = e.sparkSession
-    val Array(seedArr) = LocalGraph.packed(seedIds.select(col("id").cast("long")), 1)
-    val Array(srcL, dstL) = LocalGraph.packed(
-      e.select(col("src").cast("long"), col("dst").cast("long")), 2)
-    val idx = new LocalGraph.Index(seedArr.length + srcL.length)
-    seedArr.foreach(idx.ix)
-    val nSeeds = seedArr.length
-    val srcIx = srcL.map(idx.ix); val dstIx = dstL.map(idx.ix)
-    val n = idx.size
-    val (off, nbr) = LocalGraph.csr(srcIx, dstIx, n)
+    val g = LocalGraph.load(Some(seedIds), e, LocalGraph.Extend)
+    val nSeeds = g.nIds
+    val n = g.n
+    val (off, nbr) = g.csr
     val dist = Array.fill(n)(-1L)
     var frontier = new Array[Int](nSeeds)
     var i = 0
@@ -338,7 +333,7 @@ object Traversal {
     }
     import spark.implicits._
     (0 until n).filter(dist(_) >= 0L)
-      .map(v => (idx.id(v), dist(v))).toDF("id", "dist")
+      .map(v => (g.id(v), dist(v))).toDF("id", "dist")
   }
 
   /** Fixed-iteration synchronous relaxation on the driver — candidate
@@ -348,16 +343,8 @@ object Traversal {
   private def bellmanFordLocal(e: DataFrame, seedIds: DataFrame,
                                iterations: Int): DataFrame = {
     val spark = e.sparkSession
-    val parts = e.select(col("src").cast("long"), col("dst").cast("long"),
-        col("weight").cast("double")).rdd
-      .mapPartitions { it =>
-        val sb = Array.newBuilder[Long]; val db = Array.newBuilder[Long]
-        val wb = Array.newBuilder[Double]
-        it.foreach { r => sb += r.getLong(0); db += r.getLong(1); wb += r.getDouble(2) }
-        Iterator.single((sb.result(), db.result(), wb.result()))
-      }.collect()
-    val srcA = parts.flatMap(_._1); val dstA = parts.flatMap(_._2)
-    val wA = parts.flatMap(_._3)
+    val (Array(srcA, dstA), Array(wA)) = LocalGraph.packedLD(e.select(
+      col("src").cast("long"), col("dst").cast("long"), col("weight").cast("double")), 2, 1)
     val Array(seedArr) = LocalGraph.packed(seedIds.select(col("id").cast("long")), 1)
     var dist = new java.util.HashMap[Long, java.lang.Double](seedArr.length * 2)
     seedArr.foreach(s => dist.put(s, 0.0))

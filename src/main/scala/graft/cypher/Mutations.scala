@@ -162,7 +162,7 @@ object Mutations {
     // (MERGE relies on this when only the relationship is missing).
     val newNodes = chain.filter(np => !isBound(np) && np.label.isDefined)
       .map(nodeRow(graph, _))
-    val nodes = append(graph.nodes, Option.when(newNodes.nonEmpty)(
+    val nodes = PropertyGraph.append(graph.nodes, Option.when(newNodes.nonEmpty)(
       PropertyGraph.dedupById(newNodes.reduce(_ unionByName _))
         .join(graph.nodes.select("id"), Seq("id"), "left_anti")
         .select(graph.nodes.columns.map(col).toIndexedSeq: _*)).toList)
@@ -182,16 +182,8 @@ object Mutations {
       }
       edgeRows(graph, pairs, rel)
     }
-    PropertyGraph(nodes, append(graph.edges, newEdges))
+    PropertyGraph(nodes, PropertyGraph.append(graph.edges, newEdges))
   }
-
-  /** `table` with `rows` appended. `unionByName` flattens a union it is
-    * given into its own, and a persisted table that is a union (the
-    * built graph's node table) then no longer matches the cache and is
-    * recomputed from its sources; the projection keeps it whole. */
-  private def append(table: DataFrame, rows: List[DataFrame]): DataFrame =
-    if (rows.isEmpty) table
-    else (table.select(table.columns.map(col).toIndexedSeq: _*) :: rows).reduce(_ unionByName _)
 
   /** MERGE: create the pattern only when no match exists; then apply the
     * ON CREATE SET / ON MATCH SET hooks to the (created or matched)

@@ -70,15 +70,15 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
     * (test_batch_vs_single_create_consistency). One union + anti-join,
     * no per-row driver work. */
   def addNodes(rows: DataFrame): PropertyGraph =
-    PropertyGraph(nodes.unionByName(
+    PropertyGraph(PropertyGraph.append(nodes, Seq(
       PropertyGraph.dedupById(align(rows, nodes, required = Seq("id", "label")))
-        .join(nodes.select("id"), Seq("id"), "left_anti")), edges)
+        .join(nodes.select("id"), Seq("id"), "left_anti"))), edges)
 
   /** Bulk edge append (db.rs batch_create_rels): schema-aligned union;
     * multi-edges allowed, so no dedup beyond what the caller sends. */
   def addEdges(rows: DataFrame): PropertyGraph =
-    PropertyGraph(nodes, edges.unionByName(
-      align(rows, edges, required = Seq("src", "dst", "rel_type"))))
+    PropertyGraph(nodes, PropertyGraph.append(edges, Seq(
+      align(rows, edges, required = Seq("src", "dst", "rel_type")))))
 
   private def align(rows: DataFrame, target: DataFrame,
                     required: Seq[String]): DataFrame = {
@@ -151,6 +151,15 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
 }
 
 object PropertyGraph {
+  /** `table` with `rows` appended — the one append of bulk and Cypher
+    * writes. `unionByName` flattens a union it is given into its own,
+    * and a persisted table that is a union (the built graph's node
+    * table) then no longer matches the cache and is recomputed from its
+    * sources; the projection keeps it whole. */
+  private[graft] def append(table: DataFrame, rows: Seq[DataFrame]): DataFrame =
+    if (rows.isEmpty) table
+    else (table.select(table.columns.map(col).toIndexedSeq: _*) +: rows).reduce(_ unionByName _)
+
   /** One row per id within a batch, deterministic pick (smallest row by
     * the remaining columns, nulls first). Guards the id-as-primary-key
     * invariant that the anti-join in addNodes / Mutations.create protects

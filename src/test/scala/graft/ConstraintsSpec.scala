@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import graft.graph.{Constraints, PropertyGraph}
 import graft.cypher.Mutations
@@ -81,6 +84,17 @@ class ConstraintsSpec extends SparkSpec {
     // empty batch is a no-op (test_batch_empty_dataset)
     assert(g3.addNodes(Seq.empty[(Long, String, String)]
       .toDF("id", "label", "email")).nodes.count() == g3.nodes.count())
+    // a built graph's node table is a persisted union: the append reads
+    // its stored rows from the cache, not from a parquet rescan
+    def leaves(p: SparkPlan): Seq[SparkPlan] = p.collect {
+      case a: AdaptiveSparkPlanExec => leaves(a.inputPlan)
+      case l if l.children.isEmpty  => Seq(l)
+    }.flatten
+    val built = graft.graph.GraphBuilder.tpch(spark, sfDir)
+    val added = built.addNodes(Seq((1L, "User", "eve")).toDF("id", "label", "name"))
+    val scans = leaves(added.nodes.queryExecution.executedPlan)
+    assert(scans.exists(_.isInstanceOf[InMemoryTableScanExec]) &&
+      !scans.exists(_.isInstanceOf[FileSourceScanExec]), scans.mkString("\n"))
   }
 
   test("violations on the TPC-H graph match a direct aggregation") {

@@ -513,6 +513,21 @@ class PlanSpec extends SparkSpec {
     assert(readers == List("Tuning.scala"), readers)
   }
 
+  test("source audit: .rdd only in LocalGraph.scala and Paths.scala") {
+    // Driver twins load their graph through LocalGraph.load; Paths'
+    // allShortestPathsLocal carries a string column the packed collect
+    // does not take.
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/algorithms"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    assert(files.size > 10, s"source tree not found from ${new java.io.File(".").getAbsolutePath}")
+    def code(p: java.nio.file.Path): String = java.nio.file.Files.readString(p)
+      .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    val users = files.filter(p => code(p).contains(".rdd"))
+      .map(_.getFileName.toString).sorted
+    assert(users == List("LocalGraph.scala", "Paths.scala"), users)
+  }
+
   test("source audit: no TrieMap outside Memo.scala and the constraint store") {
     // Every shared build goes through graft.graph.Memo, whose clear()
     // is the one release; Constraints' map is a constraint store.

@@ -25,11 +25,12 @@ class ShuffleRegimeSpec extends SparkSpec {
   // Seeded random graph, big enough that every kernel does real work:
   // 400 nodes, ~1600 directed edges (dense enough for triangles and a
   // non-trivial core/SCC structure).
-  private lazy val (nodeDf, edgeDf, symDf, pairDf) = {
+  private lazy val (nodeDf, edgeDf, symDf, pairDf) = randomGraph(400, 1600)
+
+  private def randomGraph(n: Int, m: Int, extra: Seq[(Long, Long)] = Nil) = {
     val rnd = new scala.util.Random(42)
-    val n = 400
-    val es = Seq.fill(1600)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-      .filter { case (a, b) => a != b }.distinct
+    val es = (Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      .filter { case (a, b) => a != b } ++ extra).distinct
     val nodes = (0 until n).map(_.toLong).toDF("id")
     val edges = es.toDF("src", "dst").localCheckpoint()
     val sym = edges.unionByName(
@@ -39,6 +40,13 @@ class ShuffleRegimeSpec extends SparkSpec {
       .distinct.toDF("a", "b").localCheckpoint()
     (nodes, edges, sym, pairs)
   }
+
+  // An 80-node random graph whose edges also reach ids outside the node
+  // set: into it, out of it, between two outside ids, and a path
+  // 3 → 9003 → 5 that no SCC may use.
+  private lazy val (pNodes, pEdges, pSym, _) = randomGraph(80, 320,
+    Seq(9001L -> 1L, 9002L -> 2L, 3L -> 9003L, 4L -> 9003L, 9003L -> 5L,
+      9004L -> 9005L))
 
   private def both[A](run: => A): (A, A) = {
     val broadcastRegime = run
@@ -306,6 +314,74 @@ class ShuffleRegimeSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val (b, s) = both(lp)
     assert(b == s && b.nonEmpty)
+  }
+
+  /** Every kernel with a driver twin, over [[pEdges]]. */
+  private def outsideIdKernels(nodes: DataFrame): Seq[(String, () => DataFrame)] = {
+    import graft.algorithms.{Centrality, Dag, RandomWalks, SimRank, Traversal}
+    val weighted = pEdges.withColumn("cnt", (col("src") % 7) + 1)
+      .withColumn("weight", lit(1.0) + (col("src") + col("dst")) % 5)
+    val dag = pEdges.filter(col("src") < col("dst") || col("src") > 9000L)
+      .withColumn("w", (col("src") % 5) + 1)
+    val seeds = Seq(0L, 1L, 2L, 9004L).toDF("id")
+    Seq(
+      "cc" -> (() => Community.connectedComponents(nodes, pSym, 30)),
+      "scc" -> (() => Community.scc(nodes, pEdges)),
+      "lpa" -> (() => Community.labelPropagation(nodes, pSym, 5)),
+      "louvain" -> (() => Community.louvain(nodes, pSym, 2)),
+      "pagerank" -> (() => Community.pageRank(nodes, pEdges, 0.85, 10)),
+      "weighted pagerank" -> (() => Community.weightedPageRank(nodes, weighted, 0.85, 10)),
+      "personalized pagerank" -> (() => Community.personalizedPageRank(nodes, pEdges,
+        Seq(0L, 17L, 9001L), 0.85, 10)),
+      "hits" -> (() => Centrality.hits(nodes, pEdges, 8)),
+      "katz" -> (() => Centrality.katz(nodes, pEdges, 8)),
+      "eigenvector" -> (() => Centrality.eigenvector(nodes, pEdges, 8)),
+      "closeness" -> (() => Centrality.closeness(nodes, pEdges, 10)),
+      "eccentricity" -> (() => Centrality.eccentricity(nodes, pEdges, 10)),
+      "betweenness" -> (() => Centrality.betweenness(nodes, pEdges, 4)),
+      "walks" -> (() => RandomWalks.walks(pEdges, nodes, 6, 2)),
+      "bfs" -> (() => Traversal.bfsDistances(pEdges, seeds, 4)),
+      "bellman-ford" -> (() => Traversal.bellmanFord(weighted, seeds, 8)),
+      "dag longest paths" -> (() => Dag.longestPaths(nodes, dag, 100)),
+      "simrank" -> (() => SimRank.simRank(nodes, pEdges, 3)),
+      "k-core members" -> (() => Structure.kcoreMembers(pSym, 3, 30)),
+      "core numbers" -> (() => Structure.coreNumbers(pSym)))
+  }
+
+  test("presence rule: every driver twin agrees with its kernel on outside ids") {
+    // Integer columns key each row and must agree as sets; float columns
+    // agree within 1e-9, except SimRank's, which the kernel rounds to
+    // 6 dp (a sum that lands on a rounding boundary may round apart).
+    outsideIdKernels(pNodes).foreach { case (name, run) =>
+      def rows = run().collect().map { r =>
+        val (ds, ls) = r.toSeq.partition(_.isInstanceOf[Double])
+        ls -> ds.map(_.asInstanceOf[Double])
+      }
+      val (b, s) = both(rows)
+      val sm = s.toMap
+      assert(b.nonEmpty && b.length == s.length && b.map(_._1).toSet == sm.keySet,
+        s"$name: rows differ across regimes")
+      // an id outside the node set that a contribution reaches has a rank
+      if (name.endsWith("pagerank"))
+        assert(b.exists(_._1 == Seq(9003L)), s"$name misses the outside id 9003")
+      val tol = if (name == "simrank") 1.1e-6 else 1e-9
+      b.foreach { case (k, d) =>
+        d.zip(sm(k)).foreach { case (x, y) =>
+          assert(math.abs(x - y) < tol, s"$name$k differs across regimes") }
+      }
+    }
+  }
+
+  test("driver twins intern a repeated node id once") {
+    // ids are the node table's key; a frame that repeats some must give
+    // the driver regime the same rows as the distinct ids
+    val dup = pNodes.unionByName(pNodes.filter(col("id") < 3))
+    val picked = Set("scc", "katz", "lpa", "eigenvector")
+    outsideIdKernels(dup).zip(outsideIdKernels(pNodes))
+      .filter { case ((name, _), _) => picked(name) }
+      .foreach { case ((name, onDup), (_, onIds)) =>
+        assert(asSet(onDup()) == asSet(onIds()), s"$name differs on repeated ids")
+      }
   }
 
   /** `localCheckpoint` actions that `body` runs, counted by a
